@@ -2,15 +2,16 @@
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
 local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
 
-    {"metric": "total_median_sec", "value": N, "unit": "sec",
-     "queries": {name: sec, ...}, "sf": 0.1, "queries_file": ...}
+    {"metric": "total_median_sec", "value": N, "unit": "sec", "sf": 0.1,
+     "cpus": C, ..., "queries_file": "BENCH_FULL_c<C>.json"}
 
 The driver captures only the LAST 2000 characters of stdout; a full
 per-query map for 119 queries is ~4 KB, so round 2's record truncated
 into unparseable JSON (BENCH_r02 `parsed: null`). The final stdout line
-is therefore kept compact — total, counts, and the slowest-20 query map
-— and the COMPLETE per-query map is written to BENCH_FULL.json at the
-repo root for the judge.
+is therefore kept compact — total, counts, and the worst-3 ratios vs the
+baseline — and the COMPLETE per-query map is written to BENCH_FULL.json
+and BENCH_FULL_c<cpus>.json at the repo root (BENCH_SUBSET.json for a
+subset run); the final line's queries_file names the per-CPUs file.
 
 Protocol (BASELINE.md §2): per query, 1 warm-up execution then
 BENCH_RUNS timed executions (default 3), median recorded. Execution is
@@ -302,35 +303,17 @@ def main() -> int:
     if not names:
         # The driver benches the same tree at two core counts and both
         # runs write BENCH_FULL.json, so the second overwrites the
-        # first's per-query map — PERF_r13's per_query and scaling
-        # tables came out empty (round-13 verdict ask #1). A per-CPUs
-        # copy keeps both runs' complete records on disk.
-        with open(
-            os.path.join(REPO_ROOT, f"BENCH_FULL_c{CPUS}.json"), "w"
-        ) as f:
+        # first's per-query map. The per-CPUs copy keeps both runs'
+        # complete records on disk; it is what the final line names and
+        # what round-over-round and scaling comparators read.
+        full_path = os.path.join(REPO_ROOT, f"BENCH_FULL_c{CPUS}.json")
+        with open(full_path, "w") as f:
             json.dump(record, f, indent=1, sort_keys=True)
-    # Second machine-readable stdout line (round-13 verdict ask #1):
-    # the complete name->median map, so the driver's round-over-round
-    # and scaling comparators are self-contained even when BENCH_FULL
-    # is overwritten. Printed BEFORE the final line: a tail-truncated
-    # capture still ends with the intact compact summary line below.
-    print(
-        json.dumps(
-            {
-                "metric": "per_query_median_sec",
-                "sf": sf,
-                "cpus": CPUS,
-                "queries": results,
-            },
-            separators=(",", ":"),
-            sort_keys=True,
-        )
-    )
     # Compact final line, guaranteed well under the driver's 2000-char
     # tail capture (round-2 parsed null, round-3 truncated): total,
     # counts, geomean vs the BASELINE.md §3 v1 ratchets, and only the
-    # worst-3 ratio queries. The complete per-query map lives in
-    # BENCH_FULL.json.
+    # worst-3 ratio queries. The complete per-query map lives in the
+    # file named by queries_file.
     sys.path.insert(0, os.path.join(REPO_ROOT, "tools"))
     geomean = None
     worst3: dict[str, float] = {}

@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 
 from ..registry import register
 from ..plans.relational import _t
-from ..sources.loader import scan_wide, wide_docs
+from ..sources.loader import wide_docs
 
 
 # One shared definition (sources/loader.wide_docs); local alias keeps
@@ -45,15 +45,20 @@ MAX_CHUNK_FREQ = 64  # drop simhash chunk buckets hotter than this
     """,
 )
 def x_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact dedup, keep lowest doc_id per identical text. Partitioning key
-    is the md5 digest, not the text, so the shuffle moves 16 bytes per row."""
+    """Exact dedup, keep lowest doc_id per identical text."""
     docs = _t(spark, sf_dir, "documents")
-    w = W.partitionBy(F.md5("text")).orderBy("doc_id")
+    return exact_dedup(docs, "doc_id", "text").select("doc_id", "lang").orderBy("doc_id")
+
+
+def exact_dedup(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """Keep the lowest id per identical text. Partitioning key is the md5
+    digest, not the text, so the shuffle moves 16 bytes per row. Shared
+    by x_dedup_exact and CorpusPipeline.exact_dedup."""
+    w = W.partitionBy(F.md5(text_col)).orderBy(id_col)
     return (
-        docs.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("doc_id", "lang")
-        .orderBy("doc_id")
+        docs.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") == 1)
+        .drop("__rn")
     )
 
 
@@ -298,38 +303,43 @@ def minhash_signature(sh: DataFrame) -> DataFrame:
 
 @register("x_dedup_minhash", tags=("EXT", "X2"), oracle=None, bench=True)
 def x_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash+LSH near-dup pairs: shingle -> 32-way minhash -> 8 bands ->
-    self-join on (band_id, band_hash) -> verify exact shingle-Jaccard >= 0.6.
-    The join is on band buckets (candidates ~ linear), and verification
-    re-joins only candidate ids back to their shingle sets.
+    """MinHash+LSH near-dup pairs at Jaccard >= 0.6 (minhash_near_dups)."""
+    docs = _t(spark, sf_dir, "documents")
+    return minhash_near_dups(docs, "doc_id", "text", 0.6).orderBy("id_a", "id_b")
+
+
+def minhash_near_dups(
+    docs: DataFrame, id_col: str, text_col: str, threshold: float = 0.6
+) -> DataFrame:
+    """(id_a, id_b, jaccard) near-dup pairs: shingle -> 32-way minhash ->
+    8 bands -> capped self-join on (band_id, band_hash) -> verify exact
+    shingle-Jaccard >= threshold. The join is on band buckets
+    (candidates ~ linear), and verification re-joins only candidate ids
+    back to their shingle sets. Shared by x_dedup_minhash and
+    CorpusPipeline.near_dup_pairs.
 
     The shingle frame is persisted so signature generation and the
-    verification re-join share one tokenization pass (it feeds three plan
-    branches). At cluster scale the equivalent move is materializing the
-    signature/shingle table to parquet once per corpus snapshot."""
-    docs = _t(spark, sf_dir, "documents")
-    sh_cached = shingle_frame(docs, "doc_id", "text").persist()
-    # Persist the band frame too: it feeds three plan branches (the
-    # bucket-size cap pass and both sides of the candidate self-join);
-    # without it the 32-hash signature aggregation runs three times.
-    bands = minhash_signature(sh_cached).persist()
-    # Hot-bucket cap (freq_capped): dense duplicate clusters that would
-    # serialize one task are exact-dedup's job (x_dedup_exact).
+    verification re-join share one tokenization pass; the band frame is
+    persisted because it feeds the bucket-size cap pass and both sides
+    of the candidate self-join (without it the 32-hash signature
+    aggregation runs three times). At cluster scale the equivalent move
+    is materializing the signature/shingle table once per corpus
+    snapshot. The hot-bucket cap (freq_capped) leaves dense duplicate
+    clusters to exact dedup."""
+    sh = shingle_frame(docs, id_col, text_col).persist()
+    bands = minhash_signature(sh).persist()
     cand = candidate_pairs(bands, ["band_id", "band_hash"], "id", cap=MAX_BAND_FREQ)
-    sh = sh_cached
-    verified = (
-        cand.join(sh.withColumnRenamed("id", "id_a").withColumnRenamed("sh", "sh_a"), "id_a")
-        .join(sh.withColumnRenamed("id", "id_b").withColumnRenamed("sh", "sh_b"), "id_b")
-        .withColumn("inter", F.size(F.array_intersect("sh_a", "sh_b")))
+    return (
+        cand.join(sh.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a")), "id_a")
+        .join(sh.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b")), "id_b")
+        .withColumn("__inter", F.size(F.array_intersect("sh_a", "sh_b")))
         .withColumn(
             "jaccard",
-            F.col("inter") / (F.size("sh_a") + F.size("sh_b") - F.col("inter")),
+            F.col("__inter") / (F.size("sh_a") + F.size("sh_b") - F.col("__inter")),
         )
-        .filter(F.col("jaccard") >= 0.6)
+        .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
-        .orderBy("id_a", "id_b")
     )
-    return verified
 
 
 @register(

@@ -913,9 +913,18 @@ def x_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
         "region",
         "internal_w",
         "degree_w",
-        F.round("qc", 6).alias("q_contrib"),
-        F.round(F.sum("qc").over(w), 6).alias("q_cum"),
+        signed_round(F.col("qc"), 6).alias("q_contrib"),
+        signed_round(F.sum("qc").over(w), 6).alias("q_cum"),
     ).orderBy("region")
+
+
+def signed_round(x: F.Column, scale: int) -> F.Column:
+    """round(x, scale) that keeps x's sign when the result is zero, as
+    DuckDB's round does: Spark rounds through BigDecimal, which has no
+    negative zero, so round(-1e-8, 6) is 0.0 there and -0.0 in the
+    oracle. 0.0 * signum(x) restores the sign on exactly those rows."""
+    r = F.round(x, scale)
+    return F.when(r == 0, r * F.signum(x)).otherwise(r)
 
 
 @register(

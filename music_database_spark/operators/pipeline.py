@@ -19,8 +19,8 @@ from pyspark.sql import functions as F
 
 from ..registry import register
 from ..plans.relational import _t
-from .ranking import track_cache, two_level_rank
-from ..sources.loader import scan_wide, wide_docs
+from .ranking import two_level_rank
+from ..sources.loader import wide_docs
 
 
 # One shared definition (sources/loader.wide_docs); local alias keeps
@@ -61,16 +61,8 @@ def x_hash_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     md5 is evaluated JVM-side in whole-stage codegen.
     """
     docs = _t(spark, sf_dir, "documents")
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4), 16, 10)
-        .cast("int")
-        % 100
-    )
-    split = (
-        F.when(bucket < 80, "train").when(bucket < 90, "validation").otherwise("test")
-    )
     return (
-        docs.select(split.alias("split"), "doc_id", "n_chars")
+        with_split(docs, "doc_id")
         .groupBy("split")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
@@ -79,6 +71,32 @@ def x_hash_split(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("doc_id").cast("bigint").alias("max_doc"),
         )
         .orderBy("split")
+    )
+
+
+def md5_bucket(id_col: str, salt: str = "") -> F.Column:
+    """int(md5(salt || id)[:4], 16) % 100 — the stable per-id bucket
+    behind every deterministic split and sample: content- and
+    order-independent, so membership never moves as the corpus grows."""
+    key = (
+        F.concat(F.lit(salt), F.col(id_col).cast("string"))
+        if salt
+        else F.col(id_col).cast("string")
+    )
+    return F.conv(F.substring(F.md5(key), 1, 4), 16, 10).cast("int") % 100
+
+
+def with_split(
+    docs: DataFrame, id_col: str, train: int = 80, validation: int = 10
+) -> DataFrame:
+    """docs + md5-bucket `split` column (train/validation/test). Shared by
+    x_hash_split and CorpusPipeline.with_split."""
+    b = md5_bucket(id_col)
+    return docs.withColumn(
+        "split",
+        F.when(b < train, "train")
+        .when(b < train + validation, "validation")
+        .otherwise("test"),
     )
 
 
@@ -130,50 +148,59 @@ def x_repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_tok) per row is cheaper at any scale. Thresholds are integer
     cross-multiplications — no float compares to drift between engines.
     """
-    docs = _docs(spark, sf_dir)
-    m = docs.select(
-        "lang",
-        F.expr("filter(split(text, ' '), t -> t != '')").alias("toks"),
-    ).select(
-        "lang",
-        F.size("toks").alias("n_tok"),
-        F.expr(
-            "array_max(transform(array_distinct(toks),"
-            " u -> size(filter(toks, t -> t = u))))"
-        ).alias("max_cnt"),
-        F.when(
-            F.size("toks") >= 2,
-            F.expr(
-                "transform(sequence(1, size(toks) - 1),"
-                " i -> concat(element_at(toks, i), ' ', element_at(toks, i + 1)))"
-            ),
-        )
-        .otherwise(F.expr("array()"))
-        .alias("bigrams"),
-    )
-    f = m.select(
-        "lang",
-        "n_tok",
-        "max_cnt",
-        F.size("bigrams").alias("n_bi"),
-        (F.size("bigrams") - F.size(F.array_distinct("bigrams"))).alias("n_dup"),
-    ).withColumn(
-        "dropped",
-        (F.col("max_cnt") * 10 > F.col("n_tok") * 3)
-        | (F.col("n_dup") * 5 > F.col("n_bi")),
-    )
+    f = repetition_flags(_docs(spark, sf_dir), "text")
     return (
         f.groupBy("lang")
         .agg(
             F.sum(F.when(F.col("dropped"), 0).otherwise(1)).cast("bigint").alias("n_kept"),
             F.sum(F.when(F.col("dropped"), 1).otherwise(0)).cast("bigint").alias("n_dropped"),
-            F.sum("max_cnt").cast("bigint").alias("sum_top_token"),
+            F.sum("__max_cnt").cast("bigint").alias("sum_top_token"),
             F.sum("n_tok").cast("bigint").alias("sum_tokens"),
-            F.sum("n_dup").cast("bigint").alias("sum_dup_bigrams"),
-            F.sum("n_bi").cast("bigint").alias("sum_bigrams"),
+            F.sum("__n_dup").cast("bigint").alias("sum_dup_bigrams"),
+            F.sum("__n_bi").cast("bigint").alias("sum_bigrams"),
         )
         .orderBy("lang")
     )
+
+
+def repetition_flags(docs: DataFrame, text_col: str) -> DataFrame:
+    """docs + Gopher repetition signals: n_tok, __max_cnt (top token
+    count), __n_bi / __n_dup (bigram and duplicate-bigram counts) and
+    `dropped` = top token > 30% of tokens OR duplicate bigrams > 20%.
+    Shared by x_repetition_filter, x_corpus_prep_e2e and
+    CorpusPipeline.with_quality_flags (which drops the __ columns)."""
+    d = docs.withColumn("__toks", F.expr(f"filter(split({text_col}, ' '), t -> t != '')"))
+    d = d.withColumn(
+        "__max_cnt",
+        F.expr(
+            "array_max(transform(array_distinct(__toks),"
+            " u -> size(filter(__toks, t -> t = u))))"
+        ),
+    ).withColumn(
+        "__bigrams",
+        F.when(
+            F.size("__toks") >= 2,
+            F.expr(
+                "transform(sequence(1, size(__toks) - 1),"
+                " i -> concat(element_at(__toks, i), ' ', element_at(__toks, i + 1)))"
+            ),
+        ).otherwise(F.expr("array()")),
+    )
+    return (
+        d.withColumn("n_tok", F.size("__toks"))
+        .withColumn("__n_bi", F.size("__bigrams"))
+        .withColumn("__n_dup", F.size("__bigrams") - F.size(F.array_distinct("__bigrams")))
+        .withColumn(
+            "dropped",
+            (F.col("__max_cnt") * 10 > F.col("n_tok") * 3)
+            | (F.col("__n_dup") * 5 > F.col("__n_bi")),
+        )
+        .drop("__toks", "__bigrams")
+    )
+
+
+EMAIL_RE = r"[a-z0-9]+@[a-z]+\.[a-z]+"
+PHONE_RE = r"[0-9]{3}-[0-9]+"
 
 
 @register(
@@ -217,8 +244,6 @@ def x_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     which mean the same thing in Java regex (Spark) and RE2 (DuckDB).
     """
     docs = _docs(spark, sf_dir)
-    email_re = r"[a-z0-9]+@[a-z]+\.[a-z]+"
-    phone_re = r"[0-9]{3}-[0-9]+"
     aug = docs.select(
         "lang",
         F.concat(
@@ -229,25 +254,32 @@ def x_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("doc_id") % 100).cast("string"),
         ).alias("text_aug"),
     )
-    red = aug.select(
-        "lang",
-        "text_aug",
-        F.regexp_replace(
-            F.regexp_replace("text_aug", email_re, "<EMAIL>"), phone_re, "<PHONE>"
-        ).alias("text_red"),
-        F.size(F.regexp_extract_all("text_aug", F.lit(email_re), F.lit(0))).alias("n_emails"),
-        F.size(F.regexp_extract_all("text_aug", F.lit(phone_re), F.lit(0))).alias("n_phones"),
-    )
+
+    def n_hits(pat: str) -> F.Column:
+        return F.size(F.regexp_extract_all("text_aug", F.lit(pat), F.lit(0)))
+
     return (
-        red.groupBy("lang")
+        redact(aug, "text_aug", "text_red")
+        .groupBy("lang")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_emails").cast("bigint").alias("total_emails"),
-            F.sum("n_phones").cast("bigint").alias("total_phones"),
+            F.sum(n_hits(EMAIL_RE)).cast("bigint").alias("total_emails"),
+            F.sum(n_hits(PHONE_RE)).cast("bigint").alias("total_phones"),
             F.sum(F.length("text_aug")).cast("bigint").alias("sum_len_before"),
             F.sum(F.length("text_red")).cast("bigint").alias("sum_len_after"),
         )
         .orderBy("lang")
+    )
+
+
+def redact(docs: DataFrame, text_col: str, out_col: str) -> DataFrame:
+    """docs + `out_col`: text_col with email/phone patterns replaced by
+    typed placeholders. Shared by x_redact and CorpusPipeline.redact."""
+    return docs.withColumn(
+        out_col,
+        F.regexp_replace(
+            F.regexp_replace(text_col, EMAIL_RE, "<EMAIL>"), PHONE_RE, "<PHONE>"
+        ),
     )
 
 
@@ -284,32 +316,43 @@ def x_seq_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_langs * n_shards partitions instead of serializing per language.
     At cluster scale shard count rises with executor count; the
     per-stream semantics are unchanged."""
-    docs = _t(spark, sf_dir, "documents")
-    t = docs.select(
-        "lang",
-        "doc_id",
-        (F.col("doc_id") % 8).alias("shard"),
-        F.size(F.expr("filter(split(text, ' '), x -> x != '')")).alias("n_tok"),
-    )
-    w = (
-        W.partitionBy("lang", "shard")
-        .orderBy("doc_id")
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-    )
-    c = t.withColumn("cum", F.sum("n_tok").over(w))
+    docs = _t(spark, sf_dir, "documents").select("lang", "doc_id", "text")
     return (
-        c.select(
-            "lang",
-            "shard",
-            F.expr("(cum - n_tok) div 2048").alias("bin"),
-            "n_tok",
-        )
+        pack_sequences(docs, "doc_id", "text", by=("lang",))
         .groupBy("lang", "shard", "bin")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_tok").cast("bigint").alias("n_tokens"),
+            F.sum("__n_tok").cast("bigint").alias("n_tokens"),
         )
         .orderBy("lang", "shard", "bin")
+    )
+
+
+def pack_sequences(
+    docs: DataFrame,
+    id_col: str,
+    text_col: str,
+    window_tokens: int = 2048,
+    shards: int = 8,
+    by: tuple[str, ...] = (),
+) -> DataFrame:
+    """docs + (__n_tok, shard, bin): greedy packing in stable id order
+    into window_tokens-token windows, one parallel stream per
+    (*by, shard) with shard = id % shards. Shared by x_seq_packing
+    (by=('lang',)) and CorpusPipeline.pack_sequences (one stream per
+    shard, which drops __n_tok)."""
+    d = docs.withColumn(
+        "__n_tok", F.size(F.expr(f"filter(split({text_col}, ' '), t -> t != '')"))
+    ).withColumn("shard", F.col(id_col) % shards)
+    w = (
+        W.partitionBy(*by, "shard")
+        .orderBy(id_col)
+        .rowsBetween(W.unboundedPreceding, W.currentRow)
+    )
+    return (
+        d.withColumn("__cum", F.sum("__n_tok").over(w))
+        .withColumn("bin", F.expr(f"(__cum - __n_tok) div {window_tokens}"))
+        .drop("__cum")
     )
 
 
@@ -357,39 +400,56 @@ def x_padding_waste(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-only tokenization, a (lang, shard)-keyed partial agg collapsing
     the corpus to |langs|x8 rows, then a |langs|-row rollup — strictly
     cheaper than x_seq_packing itself since no window function runs."""
-    docs = _t(spark, sf_dir, "documents")
+    return padding_waste(_t(spark, sf_dir, "documents"), "doc_id", "text")
+
+
+def padding_waste(
+    docs: DataFrame,
+    id_col: str,
+    text_col: str,
+    by: str = "lang",
+    window_tokens: int = 2048,
+    shards: int = 8,
+) -> DataFrame:
+    """Per `by` group of the pack_sequences layout: n_streams,
+    total_tokens, n_windows, padding_tokens, padding_frac and
+    shard_overhead_windows, ordered by `by`. Shared by x_padding_waste
+    and CorpusPipeline.padding_waste."""
     stream = (
         docs.select(
-            "lang",
-            (F.col("doc_id") % 8).alias("shard"),
-            F.size(F.expr("filter(split(text, ' '), x -> x != '')")).alias("n_tok"),
+            by,
+            (F.col(id_col) % shards).alias("__shard"),
+            F.size(F.expr(f"filter(split({text_col}, ' '), t -> t != '')")).alias("__n_tok"),
         )
-        .groupBy("lang", "shard")
-        .agg(F.sum("n_tok").alias("toks"))
+        .groupBy(by, "__shard")
+        .agg(F.sum("__n_tok").alias("__toks"))
     )
-    win = F.expr("(toks + 2047) div 2048")
-    agg = stream.groupBy("lang").agg(
+    win = F.expr(f"(__toks + {window_tokens - 1}) div {window_tokens}")
+    agg = stream.groupBy(by).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_streams"),
-        F.sum("toks").cast("bigint").alias("total_tokens"),
+        F.sum("__toks").cast("bigint").alias("total_tokens"),
         F.sum(win).cast("bigint").alias("n_windows"),
     )
     return agg.select(
-        "lang",
+        by,
         "n_streams",
         "total_tokens",
         "n_windows",
-        (F.col("n_windows") * 2048 - F.col("total_tokens"))
+        (F.col("n_windows") * window_tokens - F.col("total_tokens"))
         .cast("bigint")
         .alias("padding_tokens"),
         F.round(
-            (F.col("n_windows") * 2048 - F.col("total_tokens")).cast("double")
-            / (F.col("n_windows") * 2048).cast("double"),
+            (F.col("n_windows") * window_tokens - F.col("total_tokens")).cast("double")
+            / (F.col("n_windows") * window_tokens).cast("double"),
             6,
         ).alias("padding_frac"),
-        (F.col("n_windows") - F.expr("(total_tokens + 2047) div 2048"))
+        (
+            F.col("n_windows")
+            - F.expr(f"(total_tokens + {window_tokens - 1}) div {window_tokens}")
+        )
         .cast("bigint")
         .alias("shard_overhead_windows"),
-    ).orderBy("lang")
+    ).orderBy(by)
 
 
 @register(
@@ -420,28 +480,25 @@ def x_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     property an eval-holdout pipeline needs. Map-only until the per-lang
     summary agg."""
     docs = _t(spark, sf_dir, "documents")
-    bucket = (
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit("strat:"), F.col("doc_id").cast("string"))), 1, 4),
-            16,
-            10,
-        ).cast("int")
-        % 100
-    )
-    s = docs.select("lang", "n_chars", bucket.alias("bucket"))
+    s = docs.select("lang", "n_chars", in_sample("doc_id").alias("hit"))
     return (
         s.groupBy("lang")
         .agg(
             F.count(F.lit(1)).alias("n_total"),
-            F.sum(F.when(F.col("bucket") < 10, 1).otherwise(0))
-            .cast("bigint")
-            .alias("n_sampled"),
-            F.sum(F.when(F.col("bucket") < 10, F.col("n_chars")).otherwise(0))
+            F.sum(F.when(F.col("hit"), 1).otherwise(0)).cast("bigint").alias("n_sampled"),
+            F.sum(F.when(F.col("hit"), F.col("n_chars")).otherwise(0))
             .cast("bigint")
             .alias("sampled_chars"),
         )
         .orderBy("lang")
     )
+
+
+def in_sample(id_col: str, rate_pct: int = 10, salt: str = "strat:") -> F.Column:
+    """Exact-rate deterministic sample membership: the salted md5 bucket
+    falls under rate_pct. Shared by x_stratified_sample and
+    CorpusPipeline.sample."""
+    return md5_bucket(id_col, salt) < rate_pct
 
 
 @register(
@@ -500,61 +557,13 @@ def x_corpus_prep_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     document once per alias reference — 16 copies of filter(split(...))
     in one Filter node, a measured 7x slowdown, invisible at small scale
     but fatal at 100 TB."""
-    docs = _docs(spark, sf_dir)
-    t = docs.select(
-        "doc_id",
-        "lang",
-        F.md5("text").alias("__h"),
-        F.expr("filter(split(text, ' '), t -> t != '')").alias("t"),
-    )
-    m = t.select(
-        "doc_id",
-        "lang",
-        "__h",
-        F.size("t").alias("n_tok"),
-        F.expr(
-            "array_max(transform(array_distinct(t), u -> size(filter(t, x -> x = u))))"
-        ).alias("max_cnt"),
-        F.when(
-            F.size("t") >= 2,
-            F.expr(
-                "transform(sequence(1, size(t) - 1),"
-                " i -> concat(element_at(t, i), ' ', element_at(t, i + 1)))"
-            ),
-        )
-        .otherwise(F.expr("array()"))
-        .alias("bigrams"),
-    ).select(
-        "doc_id",
-        "lang",
-        "__h",
-        "n_tok",
-        "max_cnt",
-        F.size("bigrams").alias("n_bi"),
-        (F.size("bigrams") - F.size(F.array_distinct("bigrams"))).alias("n_dup"),
-    )
+    docs = _docs(spark, sf_dir).select("doc_id", "lang", F.md5("text").alias("__h"), "text")
     w = W.partitionBy("__h").orderBy("doc_id")
-    uniq = m.withColumn("rn", F.row_number().over(w))
-    q = uniq.filter(
-        (F.col("rn") == 1)
-        & (F.col("max_cnt") * 10 <= F.col("n_tok") * 3)
-        & (F.col("n_dup") * 5 <= F.greatest(F.col("n_bi"), F.lit(0)))
-    ).select("doc_id", "lang", "n_tok")
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4), 16, 10)
-        .cast("int")
-        % 100
-    )
-    s = q.select(
-        F.when(bucket < 80, "train")
-        .when(bucket < 90, "validation")
-        .otherwise("test")
-        .alias("split"),
-        "lang",
-        "n_tok",
-    )
+    uniq = repetition_flags(docs, "text").withColumn("rn", F.row_number().over(w))
+    q = uniq.filter((F.col("rn") == 1) & ~F.col("dropped"))
     return (
-        s.groupBy("split", "lang")
+        with_split(q, "doc_id")
+        .groupBy("split", "lang")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
             F.sum("n_tok").cast("bigint").alias("n_tokens"),
@@ -718,30 +727,57 @@ def x_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     (pipeline mandate, SURVEY.md §2.10 X1/X4).
     """
     docs = _docs(spark, sf_dir)
-    toks = F.split("text", " ")
-    n_sh = F.greatest(F.size(toks) - CONTAM_NGRAM + 1, F.lit(1))
-    sh_arr = F.transform(
+    corpus = docs.filter(F.col("doc_id") % BENCH_MOD != 0)
+    bench = docs.filter(F.col("doc_id") % BENCH_MOD == 0)
+    return decontaminate(corpus, "doc_id", "text", bench).orderBy("doc_id")
+
+
+def md5_shingles(
+    docs: DataFrame,
+    id_col: str,
+    text_col: str,
+    ngram: int = CONTAM_NGRAM,
+    carry: tuple[str, ...] = (),
+) -> DataFrame:
+    """(id_col, *carry, sh_hash): each doc's distinct md5 digests of
+    overlapping ngram-word shingles over the UNFILTERED space split
+    (repeated spaces leave empty tokens inside shingles, as in the
+    oracles); a doc shorter than ngram words is one shingle. `carry`
+    names per-doc columns to keep alongside the id."""
+    toks = F.split(text_col, " ")
+    n_sh = F.greatest(F.size(toks) - ngram + 1, F.lit(1))
+    arr = F.transform(
         F.sequence(F.lit(1), n_sh),
-        lambda i: F.md5(F.concat_ws(" ", F.slice(toks, i, CONTAM_NGRAM))),
+        lambda i: F.md5(F.concat_ws(" ", F.slice(toks, i, ngram))),
     )
-    sh = (
-        docs.select("doc_id", F.explode(sh_arr).alias("sh_hash"))
-        .dropDuplicates(["doc_id", "sh_hash"])
+    return docs.select(id_col, *carry, F.explode(arr).alias("sh_hash")).dropDuplicates(
+        [id_col, "sh_hash"]
     )
-    bench = (
-        sh.filter(F.col("doc_id") % BENCH_MOD == 0).select("sh_hash").distinct()
-    )
+
+
+def decontaminate(
+    docs: DataFrame,
+    id_col: str,
+    text_col: str,
+    bench: DataFrame,
+    ngram: int = CONTAM_NGRAM,
+    min_overlap: int = CONTAM_MIN,
+) -> DataFrame:
+    """(id_col, n_overlap, contaminated) for every doc sharing any
+    distinct shingle with `bench` (same id/text columns). The bench
+    digest set broadcasts. Shared by x_decontaminate and
+    CorpusPipeline.decontaminate."""
+    bench_sh = md5_shingles(bench, id_col, text_col, ngram).select("sh_hash").distinct()
     return (
-        sh.filter(F.col("doc_id") % BENCH_MOD != 0)
-        .join(F.broadcast(bench), "sh_hash")
-        .groupBy("doc_id")
+        md5_shingles(docs, id_col, text_col, ngram)
+        .join(F.broadcast(bench_sh), "sh_hash")
+        .groupBy(id_col)
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_overlap"))
         .select(
-            "doc_id",
+            id_col,
             "n_overlap",
-            (F.col("n_overlap") >= CONTAM_MIN).alias("contaminated"),
+            (F.col("n_overlap") >= min_overlap).alias("contaminated"),
         )
-        .orderBy("doc_id")
     )
 
 
@@ -938,17 +974,7 @@ def x_bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact shuffle join that guarantees exactness. Reference parity: no
     such surface in the reference (pipeline mandate, SURVEY.md §2.10).
     """
-    docs = _docs(spark, sf_dir)
-    toks = F.split("text", " ")
-    n_sh = F.greatest(F.size(toks) - CONTAM_NGRAM + 1, F.lit(1))
-    sh_arr = F.transform(
-        F.sequence(F.lit(1), n_sh),
-        lambda i: F.md5(F.concat_ws(" ", F.slice(toks, i, CONTAM_NGRAM))),
-    )
-    sh = (
-        docs.select("doc_id", F.explode(sh_arr).alias("sh_hash"))
-        .dropDuplicates(["doc_id", "sh_hash"])
-    )
+    sh = md5_shingles(_docs(spark, sf_dir), "doc_id", "text")
     bench = (
         sh.filter(F.col("doc_id") % BENCH_MOD == 0).select("sh_hash").distinct()
     )
@@ -1035,21 +1061,8 @@ def x_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     uniform draw. Reference parity: no sampling surface in the
     reference (SURVEY.md §2.10 X4 mandate)."""
     docs = _t(spark, sf_dir, "documents")
-    u = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 6), 16, 10)
-        .cast("bigint")
-        + 1
-    ) / F.lit(16777217.0)
-    keyed = docs.select(
-        "doc_id",
-        "source",
-        "n_chars",
-        F.round(F.log(u) / F.col("n_chars"), 12).alias("skey"),
-    )
-    w = W.partitionBy("source").orderBy(F.desc("skey"), "doc_id")
     return (
-        keyed.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= WSAMPLE_K)
+        weighted_sample(docs, "doc_id", WSAMPLE_K, "n_chars", group_col="source")
         .groupBy("source")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_kept"),
@@ -1057,6 +1070,30 @@ def x_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("n_chars").cast("bigint").alias("kept_chars"),
         )
         .orderBy("source")
+    )
+
+
+def weighted_sample(
+    docs: DataFrame, id_col: str, k: int, weight_col: str, group_col: str | None = None
+) -> DataFrame:
+    """The k docs (per group_col group when given) with the largest
+    Efraimidis-Spirakis keys ln(u)/w, u drawn from the id's md5.
+    Non-positive weights leave the E-S key undefined, so those docs are
+    excluded up front. A global (ungrouped) selection funnels through
+    one window partition. Shared by x_weighted_sample and
+    CorpusPipeline.weighted_sample."""
+    u = (
+        F.conv(F.substring(F.md5(F.col(id_col).cast("string")), 1, 6), 16, 10).cast("bigint")
+        + 1
+    ) / F.lit(16777217.0)
+    skey = F.round(F.log(u) / F.col(weight_col), 12)
+    part = W.partitionBy(group_col) if group_col else W.partitionBy()
+    w = part.orderBy(skey.desc(), id_col)
+    return (
+        docs.filter(F.col(weight_col) > 0)
+        .withColumn("__rnk", F.row_number().over(w))
+        .filter(F.col("__rnk") <= k)
+        .drop("__rnk")
     )
 
 
@@ -1266,11 +1303,7 @@ def x_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     (x_quantile_sample's sampled order statistics).
     """
     docs = _t(spark, sf_dir, "documents")
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4), 16, 10)
-        .cast("int")
-        % 100
-    )
+    bucket = md5_bucket("doc_id")
     lab = (
         docs.select(F.col("n_chars").alias("v"), bucket.alias("bucket"))
         .filter(F.col("bucket") < 90)
@@ -1429,30 +1462,38 @@ def x_temperature_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference parity: no sampling surface in the reference
     (music_db.sql:6-106); SURVEY.md §2 EXT pipeline family."""
     docs = wide_docs(spark, sf_dir).select("lang")
-    lc = docs.groupBy("lang").agg(F.count(F.lit(1)).cast("bigint").alias("n_docs"))
-    wcum = W.orderBy("lang").rowsBetween(W.unboundedPreceding, W.currentRow)
+    return temperature_weights(docs, "lang").orderBy("lang")
+
+
+def temperature_weights(docs: DataFrame, by: str, tau_sqrt: bool = True) -> DataFrame:
+    """(by, n_docs, base_ppm, weight_temp, boost) per `by` value:
+    tau=0.5 temperature weights via exact sqrt (tau_sqrt=False keeps the
+    natural shares), normalized by a cumulative fold in `by` order.
+    Shared by x_temperature_sample and CorpusPipeline.mix_weights."""
+    lc = docs.groupBy(by).agg(F.count(F.lit(1)).cast("bigint").alias("n_docs"))
+    wcum = W.orderBy(by).rowsBetween(W.unboundedPreceding, W.currentRow)
+    s = F.sqrt(F.col("n_docs").cast("double")) if tau_sqrt else F.col("n_docs").cast("double")
     w = lc.select(
-        "lang",
+        by,
         "n_docs",
-        F.sum("n_docs").over(W.partitionBy()).cast("bigint").alias("n_total"),
-        F.sqrt(F.col("n_docs").cast("double")).alias("s"),
-        F.sum(F.sqrt(F.col("n_docs").cast("double"))).over(wcum).alias("cum"),
+        F.sum("n_docs").over(W.partitionBy()).cast("bigint").alias("__nt"),
+        s.alias("__s"),
+        F.sum(s).over(wcum).alias("__cum"),
     )
     z = w.select(
-        "lang", "n_docs", "n_total", "s", F.max("cum").over(W.partitionBy()).alias("zsum")
+        by, "n_docs", "__nt", "__s", F.max("__cum").over(W.partitionBy()).alias("__z")
     )
     return z.select(
-        "lang",
+        by,
         "n_docs",
-        F.expr("CAST(n_docs * 1000000 div n_total AS BIGINT)").alias("base_ppm"),
-        F.round(F.col("s") / F.col("zsum"), 6).alias("weight_temp"),
+        F.expr("CAST(n_docs * 1000000 div __nt AS BIGINT)").alias("base_ppm"),
+        F.round(F.col("__s") / F.col("__z"), 6).alias("weight_temp"),
         F.round(
-            F.col("s")
-            * F.col("n_total").cast("double")
-            / (F.col("zsum") * F.col("n_docs").cast("double")),
+            F.col("__s") * F.col("__nt").cast("double")
+            / (F.col("__z") * F.col("n_docs").cast("double")),
             6,
         ).alias("boost"),
-    ).orderBy("lang")
+    )
 
 
 TOKEN_BUDGET = 2_000_000  # target training tokens to allocate across sources
@@ -1522,60 +1563,61 @@ def x_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference parity: no planning surface in the reference
     (music_db.sql:6-106); SURVEY.md §2 EXT pipeline family."""
     docs = wide_docs(spark, sf_dir).select("source", "text")
-    n_tok = F.size(F.filter(F.split("text", " "), lambda x: x != ""))
-    st = docs.groupBy("source").agg(F.sum(n_tok).cast("bigint").alias("tok"))
-    cap = TOKEN_BUDGET * BUDGET_CAP_PCT // 100
-    p1 = st.select(
-        "source",
-        "tok",
-        F.sum("tok").over(W.partitionBy()).cast("bigint").alias("t_total"),
-    ).select(
-        "source",
-        "tok",
-        F.expr(f"CAST({TOKEN_BUDGET} * tok div t_total AS BIGINT)").alias("want"),
-    )
-    capped = p1.select(
-        "source",
-        "tok",
-        "want",
-        F.lit(cap).cast("bigint").alias("cap"),
-        (F.col("want") > cap).alias("is_capped"),
-    )
-    p2 = capped.select(
-        "source",
-        "tok",
-        "want",
-        "cap",
-        "is_capped",
-        (
-            F.lit(TOKEN_BUDGET)
-            - F.sum(F.least("want", "cap")).over(W.partitionBy())
+    return (
+        token_budget(docs, "text", TOKEN_BUDGET, BUDGET_CAP_PCT, "source")
+        .withColumn(
+            "fill_ppm",
+            (F.col("alloc_tokens") * 1_000_000 / F.lit(TOKEN_BUDGET)).cast("bigint"),
         )
+        .orderBy("source")
+    )
+
+
+def token_budget(
+    docs: DataFrame, text_col: str, budget: int, cap_pct: int = 30, by: str = "source"
+) -> DataFrame:
+    """(by, tokens_avail, alloc_tokens, is_capped): proportional share of
+    `budget` per group, capped at cap_pct%, plus one waterfilling round
+    redistributing the capped surplus — integer-exact, never over
+    budget. Shared by x_token_budget and CorpusPipeline.token_budget."""
+    n_tok = F.size(F.expr(f"filter(split({text_col}, ' '), t -> t != '')"))
+    st = docs.groupBy(by).agg(F.sum(n_tok).cast("bigint").alias("tok"))
+    cap = budget * cap_pct // 100
+    p1 = st.select(
+        by, "tok", F.sum("tok").over(W.partitionBy()).cast("bigint").alias("__tt")
+    ).select(
+        by, "tok", F.expr(f"CAST({budget} * tok div __tt AS BIGINT)").alias("__want")
+    )
+    p2 = p1.select(
+        by,
+        "tok",
+        "__want",
+        F.lit(cap).cast("bigint").alias("__cap"),
+        (F.col("__want") > cap).alias("is_capped"),
+    ).select(
+        by,
+        "tok",
+        "__want",
+        "__cap",
+        "is_capped",
+        (F.lit(budget) - F.sum(F.least("__want", "__cap")).over(W.partitionBy()))
         .cast("bigint")
-        .alias("leftover"),
+        .alias("__left"),
         F.sum(F.when(F.col("is_capped"), 0).otherwise(F.col("tok")))
         .over(W.partitionBy())
         .cast("bigint")
-        .alias("tok_uncapped"),
+        .alias("__tu"),
     )
-    base = F.least("want", "cap")
+    base = F.least("__want", "__cap")
     alloc = F.least(
-        F.when(
-            F.col("is_capped") | (F.col("tok_uncapped") == 0), base
-        ).otherwise(
-            base + F.expr("CAST(leftover * tok div tok_uncapped AS BIGINT)")
+        F.when(F.col("is_capped") | (F.col("__tu") == 0), base).otherwise(
+            base + F.expr("CAST(__left * tok div __tu AS BIGINT)")
         ),
-        F.col("cap"),
+        F.col("__cap"),
     ).cast("bigint")
     return p2.select(
-        "source",
-        F.col("tok").alias("tokens_avail"),
-        alloc.alias("alloc_tokens"),
-        "is_capped",
-        (alloc * 1_000_000 / F.lit(TOKEN_BUDGET))
-        .cast("bigint")
-        .alias("fill_ppm"),
-    ).orderBy("source")
+        by, F.col("tok").alias("tokens_avail"), alloc.alias("alloc_tokens"), "is_capped"
+    )
 
 
 @register(
@@ -1644,11 +1686,7 @@ def x_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference parity: no statistics surface in the reference
     (music_db.sql:6-106); SURVEY.md §2 EXT pipeline-monitoring family."""
     docs = wide_docs(spark, sf_dir).select("doc_id", "n_chars")
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4), 16, 10)
-        .cast("int")
-        % 100
-    )
+    bucket = md5_bucket("doc_id")
     lab = docs.select(
         F.col("n_chars").alias("v"), bucket.alias("bucket")
     ).filter(F.col("bucket") < 90).select(
@@ -1796,27 +1834,28 @@ def x_group_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference parity: no sampling surface in the reference; SURVEY.md
     §2.10 X4 sharding/sampling family."""
     docs = _t(spark, sf_dir, "documents")
+    return (
+        group_sample(docs, "doc_id", GROUP_SAMPLE_K, ("lang", "source"))
+        .select("lang", "source", "sample_rank", "doc_id", "n_chars")
+        .orderBy("lang", "source", "sample_rank")
+    )
+
+
+def group_sample(
+    docs: DataFrame, id_col: str, k: int, by: tuple[str, ...], salt: str = "gsamp:"
+) -> DataFrame:
+    """docs + sample_rank (1..k): the k smallest salted-md5 ids from
+    EVERY `by` group (min-wise, exact quota). Catalyst plans the
+    rank<=k filter as WindowGroupLimit. Shared by x_group_sample and
+    CorpusPipeline.group_sample."""
     hv = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit("gsamp:"), F.col("doc_id").cast("string"))), 1, 8
-        ),
+        F.substring(F.md5(F.concat(F.lit(salt), F.col(id_col).cast("string"))), 1, 8),
         16,
         10,
     ).cast("bigint")
-    r = docs.select(
-        "lang",
-        "source",
-        "doc_id",
-        "n_chars",
-        F.row_number()
-        .over(W.partitionBy("lang", "source").orderBy(hv.asc(), F.col("doc_id").asc()))
-        .cast("bigint")
-        .alias("sample_rank"),
-    )
-    return (
-        r.filter(F.col("sample_rank") <= GROUP_SAMPLE_K)
-        .select("lang", "source", "sample_rank", "doc_id", "n_chars")
-        .orderBy("lang", "source", "sample_rank")
+    rank = F.row_number().over(W.partitionBy(*by).orderBy(hv.asc(), F.col(id_col).asc()))
+    return docs.withColumn("sample_rank", rank.cast("bigint")).filter(
+        F.col("sample_rank") <= k
     )
 
 
@@ -1927,28 +1966,44 @@ def x_pii_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.when(F.col("doc_id") % PII_IP_MOD == 0, F.concat(F.lit(" from "), ip_str)).otherwise(F.lit("")),
         ).alias("text_aug"),
     )
-    hits = aug.select(
-        "lang",
-        F.regexp_extract("text_aug", r"[0-9]{16}", 0).alias("card"),
-        F.size(
-            F.regexp_extract_all(
-                "text_aug", F.lit(r"[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}"), F.lit(0)
-            )
-        ).alias("n_ips"),
-    )
     return (
-        hits.groupBy("lang")
+        pii_flags(aug, "text_aug")
+        .groupBy("lang")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
-            F.sum(F.when(F.col("card") != "", 1).otherwise(0)).cast("bigint").alias("n_cards"),
-            F.sum(
-                F.when((F.col("card") != "") & _luhn_spark(F.col("card")), 1).otherwise(0)
-            )
+            F.sum(F.when(F.col("pii_card") != "", 1).otherwise(0))
+            .cast("bigint")
+            .alias("n_cards"),
+            F.sum(F.when(F.col("pii_card_luhn_valid"), 1).otherwise(0))
             .cast("bigint")
             .alias("n_cards_luhn_valid"),
-            F.sum("n_ips").cast("bigint").alias("n_ips"),
+            F.sum("pii_n_ips").cast("bigint").alias("n_ips"),
         )
         .orderBy("lang")
+    )
+
+
+def pii_flags(docs: DataFrame, text_col: str) -> DataFrame:
+    """docs + (pii_card, pii_card_luhn_valid, pii_n_ips): the first
+    card-shaped 16-digit run, whether it passes the Luhn checksum, and
+    the IPv4 literal count. Map-only regex + integer expressions.
+    Shared by x_pii_scan and CorpusPipeline.pii_flags."""
+    return (
+        docs.withColumn("pii_card", F.regexp_extract(text_col, r"[0-9]{16}", 0))
+        .withColumn(
+            "pii_card_luhn_valid",
+            (F.col("pii_card") != "") & _luhn_spark(F.col("pii_card")),
+        )
+        .withColumn(
+            "pii_n_ips",
+            F.size(
+                F.regexp_extract_all(
+                    text_col,
+                    F.lit(r"[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}"),
+                    F.lit(0),
+                )
+            ),
+        )
     )
 
 
@@ -2016,30 +2071,12 @@ def x_contamination_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     join keeps zero-overlap docs so the denominator is every scanned
     doc, not just docs with hits."""
     docs = _docs(spark, sf_dir)
-    toks = F.split("text", " ")
-    n_sh = F.greatest(F.size(toks) - CONTAM_NGRAM + 1, F.lit(1))
-    sh_arr = F.transform(
-        F.sequence(F.lit(1), n_sh),
-        lambda i: F.md5(F.concat_ws(" ", F.slice(toks, i, CONTAM_NGRAM))),
-    )
-    sh = docs.select("doc_id", "lang", F.explode(sh_arr).alias("sh_hash")).dropDuplicates(
-        ["doc_id", "sh_hash"]
-    )
-    bench = (
-        sh.filter(F.col("doc_id") % BENCH_MOD == 0)
-        .select(F.col("sh_hash").alias("b_hash"))
-        .distinct()
-    )
-    per_doc = (
-        sh.filter(F.col("doc_id") % BENCH_MOD != 0)
-        .join(F.broadcast(bench), F.col("sh_hash") == F.col("b_hash"), "left")
-        .groupBy("doc_id", "lang")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_total"),
-            F.sum(F.when(F.col("b_hash").isNotNull(), 1).otherwise(0))
-            .cast("bigint")
-            .alias("n_hit"),
-        )
+    per_doc = contamination_fraction(
+        docs.filter(F.col("doc_id") % BENCH_MOD != 0),
+        "doc_id",
+        "text",
+        docs.filter(F.col("doc_id") % BENCH_MOD == 0),
+        carry=("lang",),
     )
     frac = F.col("n_hit").cast("double") / F.col("n_total")
     return (
@@ -2050,11 +2087,43 @@ def x_contamination_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("n_dirty"),
             (
-                F.sum(F.round(frac, 6).cast("decimal(18,6)")).cast("double")
+                F.sum(F.col("overlap_frac").cast("decimal(18,6)")).cast("double")
                 / F.count(F.lit(1))
             ).alias("avg_overlap_frac"),
         )
         .orderBy("lang")
+    )
+
+
+def contamination_fraction(
+    docs: DataFrame,
+    id_col: str,
+    text_col: str,
+    bench: DataFrame,
+    ngram: int = CONTAM_NGRAM,
+    carry: tuple[str, ...] = (),
+) -> DataFrame:
+    """(id_col, *carry, n_total, n_hit, overlap_frac) for EVERY doc: the
+    share of its distinct shingles found in `bench`'s shingle set (the
+    LEFT join keeps zero-overlap docs). Shared by
+    x_contamination_overlap and CorpusPipeline.contamination_fraction."""
+    bench_sh = (
+        md5_shingles(bench, id_col, text_col, ngram)
+        .select(F.col("sh_hash").alias("__bh"))
+        .distinct()
+    )
+    frac = F.col("n_hit").cast("double") / F.col("n_total")
+    return (
+        md5_shingles(docs, id_col, text_col, ngram, carry)
+        .join(F.broadcast(bench_sh), F.col("sh_hash") == F.col("__bh"), "left")
+        .groupBy(id_col, *carry)
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_total"),
+            F.sum(F.when(F.col("__bh").isNotNull(), 1).otherwise(0))
+            .cast("bigint")
+            .alias("n_hit"),
+        )
+        .withColumn("overlap_frac", F.round(frac, 6))
     )
 
 
@@ -2110,8 +2179,14 @@ def x_length_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     (25 cells), one broadcast of a single row. The bucket CASE uses
     fixed literal edges so the scan stays a map stage — no range agg
     dependency like x_quantile_binning's."""
-    docs = _docs(spark, sf_dir)
-    n_tok = F.size(F.expr("filter(split(text, ' '), x -> x != '')"))
+    return length_mixture(_docs(spark, sf_dir), "text", "lang").orderBy("lang", "bucket")
+
+
+def length_mixture(docs: DataFrame, text_col: str, by: str) -> DataFrame:
+    """(by, bucket, n_docs, n_tokens, uniform_weight) per token-length
+    bucket x `by` cell; uniform_weight > 1 marks cells to upsample.
+    Shared by x_length_mixture and CorpusPipeline.length_mixture."""
+    n_tok = F.size(F.expr(f"filter(split({text_col}, ' '), t -> t != '')"))
     e = LEN_BUCKET_EDGES
     bucket = (
         F.when(n_tok < e[0], "len_000")
@@ -2121,31 +2196,26 @@ def x_length_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise("len_512")
     )
     g = (
-        docs.select("lang", n_tok.alias("n_tok"), bucket.alias("bucket"))
-        .groupBy("lang", "bucket")
+        docs.select(by, n_tok.alias("__nt"), bucket.alias("bucket"))
+        .groupBy(by, "bucket")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_tok").cast("bigint").alias("n_tokens"),
+            F.sum("__nt").cast("bigint").alias("n_tokens"),
         )
-        .persist()  # 25 cells, read by both the total agg and the output
+        .persist()  # a few cells, read by both the total agg and the output
     )
     tot = g.agg(
-        F.sum("n_tokens").cast("bigint").alias("all_tokens"),
-        F.count(F.lit(1)).cast("bigint").alias("n_cells"),
+        F.sum("n_tokens").cast("bigint").alias("__all"),
+        F.count(F.lit(1)).cast("bigint").alias("__cells"),
     )
-    return (
-        g.crossJoin(F.broadcast(tot))
-        .select(
-            "lang",
-            "bucket",
-            "n_docs",
-            "n_tokens",
-            F.round(
-                F.col("all_tokens").cast("double") / F.col("n_cells") / F.col("n_tokens"),
-                6,
-            ).alias("uniform_weight"),
-        )
-        .orderBy("lang", "bucket")
+    return g.crossJoin(F.broadcast(tot)).select(
+        by,
+        "bucket",
+        "n_docs",
+        "n_tokens",
+        F.round(
+            F.col("__all").cast("double") / F.col("__cells") / F.col("n_tokens"), 6
+        ).alias("uniform_weight"),
     )
 
 
@@ -2226,60 +2296,17 @@ def x_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     selection surface in the reference (SURVEY.md §2.10 X4 mandate).
     """
     docs = _docs(spark, sf_dir)
-    tok = docs.select(
-        "doc_id", "lang", F.explode(F.split("text", " ")).alias("tok")
-    )
-    bucket = (
-        F.conv(F.substring(F.md5("tok"), 1, 8), 16, 10).cast("bigint")
-        % DSIR_BUCKETS
-    )
-    counts = (
-        tok.groupBy("doc_id", "lang", bucket.alias("bucket"))
-        .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
-        .persist()  # read twice: bucket stats and per-doc weights
-    )
-    buckets = counts.groupBy("bucket").agg(
-        F.sum(
-            F.when(F.col("lang") == DSIR_TARGET_LANG, F.col("c")).otherwise(F.lit(0))
-        )
-        .cast("bigint")
-        .alias("n_t"),
-        F.sum("c").cast("bigint").alias("n_r"),
-    )
-    totals = buckets.agg(
-        F.sum("n_t").cast("bigint").alias("t_tot"),
-        F.sum("n_r").cast("bigint").alias("r_tot"),
-    )
-    lr = buckets.crossJoin(F.broadcast(totals)).select(
-        "bucket",
-        F.round(
-            F.log(
-                ((F.col("n_t") + 1) * (F.col("r_tot") + DSIR_BUCKETS)).cast("double")
-                / ((F.col("n_r") + 1) * (F.col("t_tot") + DSIR_BUCKETS)).cast("double")
-            ),
-            6,
-        ).alias("lr"),
-    )
-    docw = (
-        counts.join(F.broadcast(lr), "bucket")
-        .select(
-            "doc_id",
-            "lang",
-            F.round(F.col("c").cast("double") * F.col("lr"), 6)
-            .cast("decimal(24,6)")
-            .alias("term"),
-        )
-        .groupBy("doc_id", "lang")
-        .agg(F.sum("term").alias("w"))
+    docw = dsir_weights(
+        docs, "doc_id", "text", F.col("lang") == DSIR_TARGET_LANG, DSIR_BUCKETS, ("lang",)
     )
     return (
         docw.groupBy("lang")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-            F.sum(F.when(F.col("w") > 0, 1).otherwise(0))
+            F.sum(F.when(F.col("dsir_weight") > 0, 1).otherwise(0))
             .cast("bigint")
             .alias("n_selected"),
-            F.sum("w").alias("__wsum"),
+            F.sum("dsir_weight").alias("__wsum"),
         )
         .select(
             "lang",
@@ -2293,4 +2320,61 @@ def x_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
         .orderBy("lang")
+    )
+
+
+def dsir_weights(
+    docs: DataFrame,
+    id_col: str,
+    text_col: str,
+    is_target: F.Column,
+    buckets: int = DSIR_BUCKETS,
+    carry: tuple[str, ...] = (),
+) -> DataFrame:
+    """(id_col, is_target, *carry, dsir_weight DECIMAL) per doc:
+    sum_b c_b * ln(p_target(b) / p_raw(b)) over word unigrams hashed into
+    `buckets` buckets, Laplace +1 smoothed; `is_target` is a boolean
+    Column marking the target slice. Each term is rounded to 6 dp and
+    summed as DECIMAL(24,6), so the weight is exact and order-free.
+    Shared by x_dsir_weights and CorpusPipeline.dsir_weights."""
+    tok = docs.select(
+        F.col(id_col).alias("__id"),
+        is_target.alias("__t"),
+        *carry,
+        F.explode(F.split(text_col, " ")).alias("__tok"),
+    )
+    bucket = F.conv(F.substring(F.md5("__tok"), 1, 8), 16, 10).cast("bigint") % buckets
+    counts = (
+        tok.groupBy("__id", "__t", *carry, bucket.alias("__b"))
+        .agg(F.count(F.lit(1)).cast("bigint").alias("__c"))
+        .persist()  # read twice: bucket stats and per-doc weights
+    )
+    stats = counts.groupBy("__b").agg(
+        F.sum(F.when(F.col("__t"), F.col("__c")).otherwise(F.lit(0)))
+        .cast("bigint")
+        .alias("__nt"),
+        F.sum("__c").cast("bigint").alias("__nr"),
+    )
+    totals = stats.agg(
+        F.sum("__nt").cast("bigint").alias("__tt"),
+        F.sum("__nr").cast("bigint").alias("__rt"),
+    )
+    lr = stats.crossJoin(F.broadcast(totals)).select(
+        "__b",
+        F.round(
+            F.log(
+                ((F.col("__nt") + 1) * (F.col("__rt") + buckets)).cast("double")
+                / ((F.col("__nr") + 1) * (F.col("__tt") + buckets)).cast("double")
+            ),
+            6,
+        ).alias("__lr"),
+    )
+    return (
+        counts.join(F.broadcast(lr), "__b")
+        .groupBy(F.col("__id").alias(id_col), F.col("__t").alias("is_target"), *carry)
+        .agg(
+            F.sum(
+                F.round(F.col("__c").cast("double") * F.col("__lr"), 6).cast("decimal(24,6)")
+            ).alias("dsir_weight")
+        )
     )

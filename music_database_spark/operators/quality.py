@@ -260,51 +260,59 @@ def x_ngram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     (SURVEY.md §2.10 X4 mandate).
     """
     docs = _t(spark, sf_dir, "documents")
-    # has2 = ">= 2 nonempty tokens" precomputed as a raw-text regex so
-    # the bigram branches never filter on size(ts) — which would inline
-    # the token HOF into an interpreted Predicate (round-9 HOF-in-Filter
-    # lint class, tools/planaudit.py lint (c)).
-    toks = docs.select(
-        "doc_id",
-        (
-            F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4), 16, 10)
-            .cast("int")
-            % 100
-        ).alias("bucket"),
-        F.expr("filter(split(text, ' '), t -> t != '')").alias("ts"),
-        F.col("text").rlike("[^ ] +[^ ]").alias("has2"),
+    return ngram_lm_score(docs, "doc_id", "text").orderBy("doc_id")
+
+
+def ngram_lm_score(
+    docs: DataFrame, id_col: str, text_col: str, train: DataFrame | None = None
+) -> DataFrame:
+    """(id_col, n_bigrams, nll) per doc with >= 2 tokens, scored by the
+    add-one bigram LM counted over `train`. With train=None the docs'
+    md5 train split (bucket < LM_TRAIN_BUCKET) trains and the held-out
+    buckets are scored; otherwise every doc is scored against `train`.
+    Shared by x_ngram_lm_score and CorpusPipeline.lm_score.
+
+    The token array is materialized ONCE per row and both the unigram
+    and bigram vocabularies derive from it. __has2 precomputes the
+    ">= 2 tokens" guard as a raw-text regex so the bigram branches never
+    filter on size(__ts) — which would inline the token HOF into an
+    interpreted Predicate (round-9 HOF-in-Filter lint class,
+    tools/planaudit.py lint (c))."""
+    from .pipeline import md5_bucket
+
+    if train is None:
+        train = docs.filter(md5_bucket(id_col) < LM_TRAIN_BUCKET)
+        docs = docs.filter(md5_bucket(id_col) >= LM_TRAIN_BUCKET)
+    toks = F.expr(f"filter(split({text_col}, ' '), t -> t != '')")
+    has2 = F.col(text_col).rlike("[^ ] +[^ ]")
+    train_ts = train.select(toks.alias("__ts"), has2.alias("__has2"))
+    eval_ts = docs.select(id_col, toks.alias("__ts"), has2.alias("__has2"))
+    bigrams = F.expr(
+        "transform(sequence(1, size(__ts) - 1),"
+        " i -> struct(element_at(__ts, i) AS w1, element_at(__ts, i + 1) AS w2))"
     )
-    train = toks.filter(F.col("bucket") < LM_TRAIN_BUCKET)
     uni = (
-        train.select(F.explode("ts").alias("w"))
+        train_ts.select(F.explode("__ts").alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).cast("bigint").alias("c1"))
     )
     vocab = uni.agg(F.count(F.lit(1)).cast("bigint").alias("v"))
-    bigrams = F.expr(
-        "transform(sequence(1, size(ts) - 1),"
-        " i -> struct(element_at(ts, i) AS w1, element_at(ts, i + 1) AS w2))"
-    )
     big = (
-        train.filter("has2")
+        train_ts.filter("__has2")
         .select(F.explode(bigrams).alias("b"))
         .select("b.w1", "b.w2")
         .groupBy("w1", "w2")
         .agg(F.count(F.lit(1)).cast("bigint").alias("c2"))
     )
-    eval_big = (
-        toks.filter((F.col("bucket") >= LM_TRAIN_BUCKET) & F.col("has2"))
-        .select("doc_id", F.explode(bigrams).alias("b"))
-        .select("doc_id", "b.w1", "b.w2")
-    )
     scored = (
-        eval_big.join(big, ["w1", "w2"], "left")
-        .join(
-            F.broadcast(uni.withColumnRenamed("w", "w1")), "w1", "left"
-        )
+        eval_ts.filter("__has2")
+        .select(id_col, F.explode(bigrams).alias("b"))
+        .select(id_col, "b.w1", "b.w2")
+        .join(big, ["w1", "w2"], "left")
+        .join(F.broadcast(uni.withColumnRenamed("w", "w1")), "w1", "left")
         .crossJoin(F.broadcast(vocab))
         .select(
-            "doc_id",
+            id_col,
             (
                 F.log(F.coalesce(F.col("c2"), F.lit(0)) + 1)
                 - F.log(F.coalesce(F.col("c1"), F.lit(0)) + F.col("v"))
@@ -312,13 +320,13 @@ def x_ngram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return (
-        scored.groupBy("doc_id")
+        scored.groupBy(id_col)
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_bigrams"),
             F.sort_array(F.collect_list("lp")).alias("lps"),
         )
         .select(
-            "doc_id",
+            id_col,
             "n_bigrams",
             F.round(
                 -F.aggregate("lps", F.lit(0.0), lambda acc, x: acc + x)
@@ -326,7 +334,6 @@ def x_ngram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
                 6,
             ).alias("nll"),
         )
-        .orderBy("doc_id")
     )
 
 
@@ -1950,45 +1957,58 @@ def x_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     possible shape for a 6-rule audit; rules are CONJUNCTIVE columns,
     not separate passes."""
     docs = scan_wide(spark, sf_dir, "documents", ["lang", "text"])
-    words = F.expr("filter(split(text, ' '), x -> x != '')")
-    n_words = F.size(words)
-    denom = F.greatest(n_words, F.lit(1))
-    mean_wl = F.length(F.concat_ws("", words)).cast("double") / denom
-    alpha_frac = (
-        F.size(F.expr("filter(filter(split(text, ' '), x -> x != ''), x -> x rlike '[a-z]')"))
-        .cast("double")
-        / denom
-    )
-    stops = F.array(*[F.lit(s) for s in GOPHER_STOPS])
-    n_stops = F.size(F.filter(stops, lambda s: F.array_contains(words, s)))
-    m = docs.select(
-        "lang",
-        n_words.alias("n_words"),
-        mean_wl.alias("mean_word_len"),
-        alpha_frac.alias("alpha_frac"),
-        n_stops.alias("n_stops"),
-    )
-    fail_wc = (F.col("n_words") < GOPHER_MIN_WORDS) | (F.col("n_words") > GOPHER_MAX_WORDS)
-    fail_mwl = (F.col("mean_word_len") < GOPHER_MWL_LO) | (
-        F.col("mean_word_len") > GOPHER_MWL_HI
-    )
-    fail_af = F.col("alpha_frac") < GOPHER_ALPHA_MIN
-    fail_st = F.col("n_stops") < GOPHER_STOP_MIN
     return (
-        m.groupBy("lang")
+        gopher_flags(docs, "text")
+        .groupBy("lang")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
-            F.sum(F.when(fail_wc, 1).otherwise(0)).cast("bigint").alias("fail_word_count"),
-            F.sum(F.when(fail_mwl, 1).otherwise(0))
-            .cast("bigint")
-            .alias("fail_mean_word_len"),
-            F.sum(F.when(fail_af, 1).otherwise(0)).cast("bigint").alias("fail_alpha_frac"),
-            F.sum(F.when(fail_st, 1).otherwise(0)).cast("bigint").alias("fail_stopwords"),
-            F.sum(F.when(~fail_wc & ~fail_mwl & ~fail_af & ~fail_st, 1).otherwise(0))
+            *[
+                F.sum(F.when(~F.col(ok), 1).otherwise(0)).cast("bigint").alias(name)
+                for ok, name in (
+                    ("ok_word_count", "fail_word_count"),
+                    ("ok_mean_word_len", "fail_mean_word_len"),
+                    ("ok_alpha_frac", "fail_alpha_frac"),
+                    ("ok_stopwords", "fail_stopwords"),
+                )
+            ],
+            F.sum(F.when(F.col("pass_gopher"), 1).otherwise(0))
             .cast("bigint")
             .alias("n_pass_all"),
         )
         .orderBy("lang")
+    )
+
+
+def gopher_flags(docs: DataFrame, text_col: str) -> DataFrame:
+    """docs + per-rule booleans (ok_word_count, ok_mean_word_len,
+    ok_alpha_frac, ok_stopwords) and their conjunction pass_gopher, at
+    the GOPHER_* thresholds. Shared by x_gopher_rules and
+    CorpusPipeline.gopher_flags."""
+    d = docs.withColumn("__toks", F.expr(f"filter(split({text_col}, ' '), t -> t != '')"))
+    n_words = F.size("__toks")
+    denom = F.greatest(n_words, F.lit(1))
+    mean_wl = F.length(F.concat_ws("", F.col("__toks"))).cast("double") / denom
+    alpha = F.size(F.expr("filter(__toks, x -> x rlike '[a-z]')")).cast("double") / denom
+    stops = F.array(*[F.lit(s) for s in GOPHER_STOPS])
+    n_stops = F.size(F.filter(stops, lambda s: F.array_contains(F.col("__toks"), s)))
+    return (
+        d.withColumn(
+            "ok_word_count",
+            (n_words >= GOPHER_MIN_WORDS) & (n_words <= GOPHER_MAX_WORDS),
+        )
+        .withColumn(
+            "ok_mean_word_len", (mean_wl >= GOPHER_MWL_LO) & (mean_wl <= GOPHER_MWL_HI)
+        )
+        .withColumn("ok_alpha_frac", alpha >= GOPHER_ALPHA_MIN)
+        .withColumn("ok_stopwords", n_stops >= GOPHER_STOP_MIN)
+        .withColumn(
+            "pass_gopher",
+            F.col("ok_word_count")
+            & F.col("ok_mean_word_len")
+            & F.col("ok_alpha_frac")
+            & F.col("ok_stopwords"),
+        )
+        .drop("__toks")
     )
 
 

@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 from ..registry import register
 from ..plans.relational import _t
 from .ranking import track_cache
-from ..sources.loader import scan_wide, wide_docs
+from ..sources.loader import wide_docs
 
 
 # One shared definition (sources/loader.wide_docs); local alias keeps
@@ -551,15 +551,29 @@ def bm25_per_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
     query term — the shared scoring core of x_bm25_search (which ranks
     its top-k) and x_ndcg (whose ideal ordering needs all matching
     docs). n_terms doubles as the graded relevance label."""
-    docs = _t(spark, sf_dir, "documents")
+    return bm25_scores(_t(spark, sf_dir, "documents"), "doc_id", "text")
+
+
+def bm25_scores(
+    docs: DataFrame,
+    id_col: str,
+    text_col: str,
+    query_terms: list[str] | None = None,
+    k1: str | float = BM25_K1,
+    b: str | float = BM25_B,
+) -> DataFrame:
+    """(id_col, n_terms, score) for every doc matching >= 1 query term.
+    query_terms=None derives the BM25_NQ highest collection-frequency
+    terms whose df sits in [5%, 50%] of the corpus (x_bm25_search's
+    data-derived query); a list scores those external terms
+    (CorpusPipeline.bm25). k1 and b enter the plan as SQL literals, so
+    the default constants build the oracle's exact expression tree."""
     tok = docs.select(
-        "doc_id",
-        F.explode(F.expr("filter(split(text, ' '), t -> t != '')")).alias("term"),
+        id_col,
+        F.explode(F.expr(f"filter(split({text_col}, ' '), t -> t != '')")).alias("term"),
     )
-    tf = tok.groupBy("doc_id", "term").agg(
-        F.count(F.lit(1)).cast("bigint").alias("tf")
-    )
-    dl = tf.groupBy("doc_id").agg(F.sum("tf").cast("bigint").alias("dl"))
+    tf = tok.groupBy(id_col, "term").agg(F.count(F.lit(1)).cast("bigint").alias("tf"))
+    dl = tf.groupBy(id_col).agg(F.sum("tf").cast("bigint").alias("dl"))
     nd = docs.agg(F.count(F.lit(1)).cast("bigint").alias("n"))
     avgdl = dl.crossJoin(F.broadcast(nd)).agg(
         (F.sum("dl").cast("double") / F.first("n").cast("double")).alias("avgdl")
@@ -568,49 +582,56 @@ def bm25_per_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("bigint").alias("df"),
         F.sum("tf").cast("bigint").alias("cf"),
     )
-    qterms = (
-        stats.crossJoin(F.broadcast(nd))
-        .filter((F.col("df") * 20 >= F.col("n")) & (F.col("df") * 2 <= F.col("n")))
-        .orderBy(F.desc("cf"), "term")
-        .limit(BM25_NQ)
-        .select("term", "df")
-    )
+    if query_terms is None:
+        qterms = (
+            stats.crossJoin(F.broadcast(nd))
+            .filter((F.col("df") * 20 >= F.col("n")) & (F.col("df") * 2 <= F.col("n")))
+            .orderBy(F.desc("cf"), "term")
+            .limit(BM25_NQ)
+        )
+    else:
+        qt = docs.sparkSession.createDataFrame([(t,) for t in query_terms], "term string")
+        qterms = stats.join(F.broadcast(qt), "term")
     scored = (
-        tf.join(F.broadcast(qterms), "term")
-        .join(dl, "doc_id")
+        tf.join(F.broadcast(qterms.select("term", "df")), "term")
+        .join(dl, id_col)
         .crossJoin(F.broadcast(nd))
         .crossJoin(F.broadcast(avgdl))
         .select(
-            "doc_id",
+            id_col,
             (
                 F.log(
                     (F.col("n").cast("double") - F.col("df").cast("double") + 0.5)
                     / (F.col("df").cast("double") + 0.5)
                     + 1.0
                 )
-                * (F.col("tf").cast("double") * F.expr(f"{BM25_K1} + 1.0"))
+                * (F.col("tf").cast("double") * F.expr(f"{k1} + 1.0"))
                 / (
                     F.col("tf").cast("double")
-                    + F.expr(
-                        f"{BM25_K1} * (1.0 - {BM25_B}"
-                        f" + {BM25_B} * CAST(dl AS DOUBLE) / avgdl)"
-                    )
+                    + F.expr(f"{k1} * (1.0 - {b} + {b} * CAST(dl AS DOUBLE) / avgdl)")
                 )
             ).alias("s"),
         )
     )
-    per_doc = scored.groupBy("doc_id").agg(
+    return scored.groupBy(id_col).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_terms"),
         F.round(
-            F.aggregate(
-                F.sort_array(F.collect_list("s")),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ),
+            F.aggregate(F.sort_array(F.collect_list("s")), F.lit(0.0), lambda acc, x: acc + x),
             6,
         ).alias("score"),
     )
-    return per_doc
+
+
+def bm25_top_k(per_doc: DataFrame, id_col: str, top_k: int) -> DataFrame:
+    """The top_k rows of a bm25_scores frame by (score DESC, id), with
+    their 1-based rank. Shared by x_bm25_search and CorpusPipeline.bm25."""
+    w = W.orderBy(F.desc("score"), id_col)
+    return (
+        per_doc.withColumn("rnk", F.row_number().over(w))
+        .filter(F.col("rnk") <= top_k)
+        .select(id_col, "n_terms", "score", "rnk")
+        .orderBy("rnk")
+    )
 
 
 # The BM25 CTE chain (tok..per_doc) shared by the x_bm25_search and
@@ -697,14 +718,7 @@ def x_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     Composes with x_tfidf (per-doc top terms) and x_knn (dense
     retrieval) as the hybrid-retrieval pair. Reference parity: no
     search surface in the reference (SURVEY.md §2.10 X4 mandate)."""
-    per_doc = bm25_per_doc(spark, sf_dir)
-    w = W.orderBy(F.desc("score"), "doc_id")
-    return (
-        per_doc.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= BM25_TOPK)
-        .select("doc_id", "n_terms", "score", "rnk")
-        .orderBy("rnk")
-    )
+    return bm25_top_k(bm25_per_doc(spark, sf_dir), "doc_id", BM25_TOPK)
 
 
 BPE_MERGES = 3  # trained merge rules, unrolled identically in the oracle

@@ -861,13 +861,10 @@ def x_kmv_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB design: per-split k-min via the same WindowGroupLimit shape
     as x_distinct_kmv (at most k rows per split forwarded per
     partition); all set algebra then happens on two 128-row frames."""
+    from ..operators.pipeline import md5_bucket
+
     docs = _t(spark, sf_dir, "documents")
-    split = F.when(
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4), 16, 10).cast("int")
-        % 100
-        < 80,
-        "train",
-    ).otherwise("heldout")
+    split = F.when(md5_bucket("doc_id") < 80, "train").otherwise("heldout")
     arr = F.split("text", " ")
     # track_cache (persist + drainable registry): the distinct trigram
     # inventory feeds the sketch side (hs) AND the exact side — without

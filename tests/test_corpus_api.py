@@ -1,10 +1,17 @@
-"""CorpusPipeline facade pinned against the registered driver queries:
-both surfaces must implement the same semantics."""
+"""CorpusPipeline facade checked against the registered driver queries.
+
+Each facade method delegates to the same shared operator function its
+registered query calls, so these tests check the wiring: the facade's
+arguments, the column it projects, and the registered query's own
+aggregate or ordering on top. A facade method that drifted from its
+query (a different default, salt, tokenizer or partitioning) fails
+here."""
 
 from __future__ import annotations
 
 import pytest
 
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMOKE
@@ -582,3 +589,122 @@ def test_contamination_fraction_irregular_whitespace_matches_hand_shingles(spark
     # the double-spaced doc is a full hit, its single-spaced variant is not
     assert out[0]["overlap_frac"] == 1.0
     assert out[1]["overlap_frac"] < 1.0
+
+
+def test_redact_matches_registered_query(spark, docs):
+    """redact over x_redact's injected-PII text must reproduce its
+    per-lang doc counts and before/after lengths."""
+    from music_database_spark.corpus import CorpusPipeline
+    from music_database_spark.registry import load_all
+
+    aug = docs.select(
+        "lang",
+        F.concat(
+            F.col("text"),
+            F.lit(" contact user"),
+            F.col("doc_id").cast("string"),
+            F.lit("@example.com or call 555-01"),
+            (F.col("doc_id") % 100).cast("string"),
+        ).alias("text"),
+    )
+    api = {
+        r["lang"]: (r["n"], r["before"], r["after"])
+        for r in CorpusPipeline(aug)
+        .redact()
+        .groupBy("lang")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum(F.length("text")).alias("before"),
+            F.sum(F.length("text_redacted")).alias("after"),
+        )
+        .collect()
+    }
+    reg = {
+        r["lang"]: (r["n_docs"], r["sum_len_before"], r["sum_len_after"])
+        for r in load_all()["x_redact"].build(spark, SF_SMOKE).collect()
+    }
+    assert api == reg
+    assert all(after < before for _, before, after in api.values())
+
+
+def test_bm25_with_derived_terms_matches_registered_search(spark, docs, pipe):
+    """bm25 fed x_bm25_search's data-derived query terms (the BM25_NQ
+    highest collection-frequency terms with df in [5%, 50%]) must return
+    the registered top-k rows exactly."""
+    from collections import Counter
+
+    from music_database_spark.operators.textops import BM25_NQ, BM25_TOPK
+    from music_database_spark.registry import load_all
+
+    texts = [r["text"] for r in docs.select("text").collect()]
+    n = len(texts)
+    df: Counter = Counter()
+    cf: Counter = Counter()
+    for text in texts:
+        toks = [t for t in text.split(" ") if t]
+        cf.update(toks)
+        df.update(set(toks))
+    informative = [t for t in df if df[t] * 20 >= n and df[t] * 2 <= n]
+    terms = sorted(informative, key=lambda t: (-cf[t], t))[:BM25_NQ]
+    assert terms
+    api = [tuple(r) for r in pipe.bm25(terms, top_k=BM25_TOPK).collect()]
+    reg = [tuple(r) for r in load_all()["x_bm25_search"].build(spark, SF_SMOKE).collect()]
+    assert api == reg and len(api) == BM25_TOPK
+
+
+def test_pack_sequences_per_lang_matches_registered_packing(spark, docs):
+    """x_seq_packing packs one stream per (lang, shard); pack_sequences
+    packs one per shard. Run per language, the facade must reproduce the
+    registered (lang, shard, bin) doc and token counts."""
+    from functools import reduce
+
+    from music_database_spark.corpus import CorpusPipeline
+    from music_database_spark.registry import load_all
+
+    n_tok = F.size(F.expr("filter(split(text, ' '), t -> t != '')"))
+    langs = [r["lang"] for r in docs.select("lang").distinct().collect()]
+    per_lang = [
+        CorpusPipeline(docs.filter(F.col("lang") == lang))
+        .pack_sequences()
+        .groupBy("lang", "shard", "bin")
+        .agg(F.count(F.lit(1)).alias("n_docs"), F.sum(n_tok).alias("n_tokens"))
+        for lang in langs
+    ]
+    api = {
+        (r["lang"], r["shard"], r["bin"]): (r["n_docs"], r["n_tokens"])
+        for r in reduce(DataFrame.unionByName, per_lang).collect()
+    }
+    reg = {
+        (r["lang"], r["shard"], r["bin"]): (r["n_docs"], r["n_tokens"])
+        for r in load_all()["x_seq_packing"].build(spark, SF_SMOKE).collect()
+    }
+    assert api == reg
+
+
+def test_decontaminate_irregular_whitespace_matches_hand_shingles(spark):
+    """decontaminate shingles the UNFILTERED split, like x_decontaminate
+    and its oracle: a double space leaves an empty token inside a
+    shingle, so 'a  b c d e' shares only 'b c d e' with 'a b c d e'
+    (a filtered split would share two shingles)."""
+    import hashlib
+
+    from music_database_spark.corpus import CorpusPipeline
+
+    rows = [(0, "a  b c d e"), (1, "a b c d e"), (2, "x  y")]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    bench = spark.createDataFrame([(99, "a  b c d e")], "doc_id long, text string")
+
+    def hand(text: str, ngram: int = 4) -> set[str]:
+        toks = text.split(" ")
+        return {
+            hashlib.md5(" ".join(toks[i : i + ngram]).encode()).hexdigest()
+            for i in range(max(len(toks) - ngram + 1, 1))
+        }
+
+    out = {
+        r["doc_id"]: r["n_overlap"]
+        for r in CorpusPipeline(docs).decontaminate(bench, min_overlap=1).collect()
+    }
+    want = {i: len(hand(t) & hand("a  b c d e")) for i, t in rows}
+    assert out == {i: n for i, n in want.items() if n > 0}
+    assert out[0] == 3 and out[1] == 1

@@ -1312,6 +1312,24 @@ def test_modularity_matches_networkx_free_reference(spark, reg):
     assert -0.5 <= last["q_cum"] <= 1.0
 
 
+def test_modularity_rounding_keeps_duckdb_signed_zero(spark):
+    """x_modularity's q_contrib/q_cum rounding must match DuckDB's
+    round(x, 6) by repr, including the sign of results that round to
+    zero (DuckDB: round(-1e-8, 6) is -0.0)."""
+    import duckdb
+
+    from music_database_spark.operators.graph import signed_round
+
+    xs = [-1e-8, -4e-7, 0.0, 1e-8, 3e-7]
+    df = spark.createDataFrame(list(enumerate(xs)), "i int, x double")
+    got = [
+        r["y"]
+        for r in df.select("i", signed_round(F.col("x"), 6).alias("y")).orderBy("i").collect()
+    ]
+    want = [duckdb.sql(f"SELECT round({x!r}::DOUBLE, 6)").fetchone()[0] for x in xs]
+    assert [repr(v) for v in got] == [repr(v) for v in want]
+
+
 def test_winsorize_matches_numpy_reference(spark, reg):
     import pandas as pd
 

@@ -12,6 +12,7 @@ Two permanent lessons pinned here:
 
 from __future__ import annotations
 
+import math
 import os
 import sys
 
@@ -75,14 +76,36 @@ def test_ratchet_budget_math_and_one_way_meter():
     a later mass relaxation (r12 ask #2 / r13 verdict ask #8)."""
     from benchcmp import ratchet_budget_spent
 
-    anchor = {"a": 1.0, "b": 2.0, "c": 4.0, "gone": 1.0}
+    anchor = {"a": 1.0, "b": 2.0, "c": 4.0}
     base = {"a": 2.0, "b": 1.0, "c": 4.0, "new_query": 9.9}
     spent, rows = ratchet_budget_spent(base, anchor)
     # only 'a' relaxed (1.0 -> 2.0 = exactly one doubling); 'b' tightened
-    # (no credit), 'c' unchanged, 'gone' missing from baseline (no charge),
-    # 'new_query' not anchored yet (no charge)
+    # (no credit), 'c' unchanged, 'new_query' not anchored yet (no charge)
     assert rows == [("a", 1.0)]
     assert spent == pytest.approx(1.0)
+    # an anchored query deleted from the baseline table is charged an
+    # unbounded relaxation: dropping its row cannot dodge the budget
+    spent, rows = ratchet_budget_spent(base, {**anchor, "gone": 1.0})
+    assert rows == [("gone", math.inf), ("a", 1.0)]
+    assert spent == math.inf
+
+
+def test_benchcmp_reports_every_gate_before_failing(tmp_path, monkeypatch, capsys):
+    """An over-budget ratchet must not hide a cold-gate failure: main()
+    evaluates both gates, prints every violation, then exits 1 once."""
+    import json
+
+    import benchcmp
+
+    q = next(q for q in benchcmp.load_baseline() if q not in benchcmp.COLD_GATE_EXEMPT)
+    path = tmp_path / "bench.json"
+    path.write_text(json.dumps({"queries": {q: 1.0}, "cold_queries": {q: 100.0}}))
+    monkeypatch.setattr(benchcmp, "load_anchor", lambda: {"row_deleted_from_baseline": 1.0})
+    monkeypatch.setattr(sys, "argv", ["benchcmp.py", str(path)])
+    assert benchcmp.main() == 1
+    err = capsys.readouterr().err
+    assert "RATCHET BUDGET EXCEEDED" in err
+    assert f"COLD GATE FAIL {q}" in err
 
 
 def test_ratchet_budget_of_shipped_tables_is_within_bounds():
@@ -105,6 +128,7 @@ def test_ratchet_budget_of_shipped_tables_is_within_bounds():
     # anchor coverage must not silently shrink: every anchored query
     # still in the baseline keeps its anchor protection
     assert len(anchor) >= 250
+    assert set(anchor) <= set(load_baseline())
 
 
 def test_foreign_cpu_fraction_separates_own_load_from_foreign():

@@ -62,7 +62,9 @@ COLD_GATE_EXEMPT: dict[str, str] = {
 # the anchor (added after r14) spends nothing until someone relaxes it
 # against its own first record, which lands in the anchor at the next
 # snapshot refresh (refreshing REQUIRES a paired budget-history note in
-# BASELINE.md §3).
+# BASELINE.md §3). An ANCHORED query missing from the baseline table is
+# charged an unbounded relaxation, so deleting its row cannot dodge the
+# budget.
 RATCHET_BUDGET_DOUBLINGS = 1.0
 
 
@@ -79,14 +81,15 @@ def ratchet_budget_spent(
     """(total doublings spent, per-query relaxations) of the current
     baseline table vs the frozen anchor. Only relaxations (current >
     anchor) spend; tightenings are ignored rather than banked so a mass
-    tightening can't fund a later mass relaxation."""
+    tightening can't fund a later mass relaxation. An anchored query
+    with no baseline entry spends an infinite relaxation."""
     spent = 0.0
     rows: list[tuple[str, float]] = []
     for q, v0 in anchor.items():
         v1 = base.get(q)
-        if v1 is None or v0 <= 0 or v1 <= v0:
+        if v1 is not None and (v0 <= 0 or v1 <= v0):
             continue
-        d = math.log2(v1 / v0)
+        d = math.inf if v1 is None else math.log2(v1 / v0)
         spent += d
         rows.append((q, d))
     return spent, sorted(rows, key=lambda kv: -kv[1])
@@ -178,6 +181,7 @@ def main() -> int:
     print(f"cold first-build >=3x warm median ({len(notable)}):")
     for q, r in sorted(notable.items(), key=lambda kv: -kv[1])[:10]:
         print(f"  {r:5.1f}x  {q:32s} cold {colds[q]:6.2f}s vs warm {bench[q]:6.2f}s")
+    failed = False
     anchor = load_anchor()
     if anchor:
         spent, relaxed = ratchet_budget_spent(base, anchor)
@@ -188,28 +192,26 @@ def main() -> int:
         for q, d in relaxed[:5]:
             print(f"  +{d:.3f}  {q}: anchor {anchor[q]} -> baseline {base.get(q)}")
         if spent > RATCHET_BUDGET_DOUBLINGS:
+            failed = True
             print(
                 f"RATCHET BUDGET EXCEEDED: {spent:.3f} > "
                 f"{RATCHET_BUDGET_DOUBLINGS} doublings of cumulative "
                 f"baseline relaxation vs RATCHET_ANCHOR.json — the v1 "
-                f"baseline is being eaten; revert a re-ratchet or make "
-                f"the queries faster",
+                f"baseline is being eaten (or an anchored row was deleted); "
+                f"revert a re-ratchet or make the queries faster",
                 file=sys.stderr,
             )
-            return 1
     violations = cold_gate_violations(bench, colds)
-    if violations:
-        for q, r in violations:
-            print(
-                f"COLD GATE FAIL {q}: cold {colds[q]:.2f}s = {r:.0f}x warm "
-                f"{bench[q]:.2f}s (bar: >={COLD_GATE_RATIO:.0f}x and "
-                f">={COLD_GATE_MIN_SEC}s; exempt list in benchcmp.py)",
-                file=sys.stderr,
-            )
-        return 1
-    print("cold-build gate: pass")
-    return 0
-
+    for q, r in violations:
+        print(
+            f"COLD GATE FAIL {q}: cold {colds[q]:.2f}s = {r:.0f}x warm "
+            f"{bench.get(q, math.nan):.2f}s (bar: >={COLD_GATE_RATIO:.0f}x and "
+            f">={COLD_GATE_MIN_SEC}s; exempt list in benchcmp.py)",
+            file=sys.stderr,
+        )
+    if not violations:
+        print("cold-build gate: pass")
+    return 1 if failed or violations else 0
 
 if __name__ == "__main__":
     raise SystemExit(main())
