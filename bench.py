@@ -1,32 +1,25 @@
 """Benchmark runner — times every registered bench query at
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
-local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
+local[$SPARK_GRAFT_CPUS] and prints ONE compact JSON line:
 
     {"metric": "total_median_sec", "value": N, "unit": "sec", "sf": 0.1,
      "cpus": C, ..., "queries_file": "BENCH_FULL_c<C>.json"}
 
-The driver captures only the LAST 2000 characters of stdout; a full
-per-query map for 119 queries is ~4 KB, so round 2's record truncated
-into unparseable JSON (BENCH_r02 `parsed: null`). The final stdout line
-is therefore kept compact — total, counts, and the worst-3 ratios vs the
-baseline — and the COMPLETE per-query map is written to BENCH_FULL.json
-and BENCH_FULL_c<cpus>.json at the repo root (BENCH_SUBSET.json for a
-subset run); the final line's queries_file names the per-CPUs file.
+The driver captures only the LAST 2000 characters of stdout (round 2's
+full per-query line truncated into unparseable JSON), so the complete
+per-query record goes to BENCH_FULL.json and BENCH_FULL_c<cpus>.json
+(BENCH_SUBSET.json for a subset run), named by the line's queries_file.
 
-Protocol (BASELINE.md §2): per query, 1 warm-up execution then
-BENCH_RUNS timed executions (default 3), median recorded. Execution is
-measured with the noop sink so the number is plan execution, not
-driver-transfer of result rows.
+Protocol (BASELINE.md §2): per query, 1 warm-up execution (recorded as
+the cold number) then BENCH_RUNS timed executions (default 3), median
+recorded, all through the noop sink; caches are released between
+queries (tools/sweep.py).
 
-Host-noise self-adjudication (round 11): the r10 driver recording
-drifted a uniform 1.31x on a contended host and needed a judge to
-re-measure three queries by hand. Each query's timing window now
-records the fraction of machine CPU consumed OUTSIDE this bench's
-process tree (/proc/stat busy minus our tree's jiffies — loadavg alone
-cannot tell our local[32] saturation from foreign load), written to
-BENCH_FULL.json as host_busy/host_noise/host_noisy_queries/loadavg and
-summarized in the final line, so a slow artifact carries its own
-adjudication."""
+Host-noise self-adjudication (round 11): each query's timing window
+records the share of machine CPU consumed OUTSIDE this bench's process
+tree (/proc/stat busy minus our tree's jiffies — loadavg cannot tell our
+local[32] saturation from foreign load), so a slow record carries its
+own adjudication instead of needing a judge to re-measure by hand."""
 
 from __future__ import annotations
 
@@ -41,22 +34,16 @@ REPO_ROOT = os.path.dirname(os.path.abspath(__file__))
 if REPO_ROOT not in sys.path:
     sys.path.insert(0, REPO_ROOT)
 
-from music_database_spark.operators.ranking import release_rank_caches  # noqa: E402
-from music_database_spark.registry import load_all  # noqa: E402
-from music_database_spark.session import get_spark  # noqa: E402
+sys.path.insert(0, os.path.join(REPO_ROOT, "tools"))
+import sweep  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 RUNS = int(os.environ.get("BENCH_RUNS", "3"))
-# Core count of this run, for the per-CPUs record filename and the
-# machine-readable lines: the driver benches at two core counts to
-# measure scaling, and both runs must stay distinguishable. get_spark
-# uses local[*] when the env var is unset, hence the cpu_count default.
+# Core count, for the per-CPUs record name: the driver benches at two
+# core counts. get_spark uses local[*] when the env var is unset.
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or (os.cpu_count() or 0))
 
-# A per-query foreign-CPU share above this marks the measurement window
-# noisy; the round-10 bench recording drifted a uniform 1.31x on a
-# contended host and needed a judge to adjudicate it — these fields make
-# the artifact carry its own adjudication.
+# A per-query foreign-CPU share above this marks the window noisy.
 HOST_NOISE_FRAC = 0.10
 
 
@@ -67,13 +54,9 @@ def sf_from_dir(sf_dir: str) -> float:
 
 def _host_busy_jiffies() -> int:
     """Total non-idle jiffies across all CPUs from /proc/stat line 1.
-    INCLUDES steal (field 8): on a VM, hypervisor steal starves the
-    bench exactly like a foreign process, so it must contaminate the
-    window; _host_steal_jiffies reports it separately so the record
-    can say WHICH kind of noise it was. EXCLUDES guest/guest_nice
-    (fields 9-10): the kernel already folds vCPU-guest time into
-    user/nice, so summing them double-counts VM load and can
-    false-flag quiet windows (round-11 ADVICE)."""
+    INCLUDES steal (field 8): hypervisor steal starves the bench like a
+    foreign process. EXCLUDES guest/guest_nice (fields 9-10), which the
+    kernel already folds into user/nice (round-11 ADVICE)."""
     with open("/proc/stat") as f:
         vals = [int(v) for v in f.readline().split()[1:]]
     guest = sum(vals[8:10]) if len(vals) > 8 else 0
@@ -90,26 +73,17 @@ def _host_steal_jiffies() -> int:
 
 def _tree_cpu_snapshot() -> dict[int, int]:
     """Per-pid CPU jiffies for THIS process tree: self + every live
-    descendant (the Spark JVM and its python workers are descendants of
-    the bench driver) via utime+stime, plus each node's cutime/cstime so
-    already-reaped children keep counting. Live children are in their
-    own utime until reaped, and roll into the parent's cutime only at
-    reap time, so the two never double-count.
+    descendant (the Spark JVM and its python workers) as
+    {pid: (utime+stime, cutime+cstime, ppid)}. Reaped children roll into
+    the parent's cutime only at reap time, so the two never double-count.
 
-    PER-PID, not a single sum: diffing two aggregate sums subtracts a
-    vanished pid's ENTIRE history (a worker-pool recycle, or one raced
-    /proc read of the JVM) from the delta, driving it negative and
-    inflating the foreign share to a phantom 100% — observed twice on
-    sub-second queries in the first instrumented runs. The caller diffs
-    pid-by-pid instead, so a vanished pid contributes its (unknowable)
-    post-snapshot burn as 0 rather than minus-its-lifetime.
-
-    own (utime+stime) and reaped-children (cutime+cstime) jiffies are
-    kept SEPARATE, with the parent pid: a child alive at snapshot time
-    but reaped before the window closes rolls its full lifetime into
-    the parent's cutime, and the delta must subtract the part that was
-    already visible at snapshot time (round-11 ADVICE — the opposite
-    bias to the vanished-pid floor)."""
+    Per pid, not one sum: diffing two aggregate sums subtracts a vanished
+    pid's whole history (a worker-pool recycle, one raced /proc read) and
+    inflated the foreign share to a phantom 100% on sub-second queries;
+    _tree_cpu_delta diffs pid by pid. Own and reaped-children jiffies are
+    kept apart, with the parent pid, so a child reaped inside the window
+    is not counted twice (round-11 ADVICE).
+    """
     kids: dict[int, list[int]] = {}
     stats: dict[int, tuple[int, int, int]] = {}
     for d in os.listdir("/proc"):
@@ -144,14 +118,11 @@ def _tree_cpu_snapshot() -> dict[int, int]:
 def _tree_cpu_delta(
     tree0: dict[int, tuple[int, int, int]], tree1: dict[int, tuple[int, int, int]]
 ) -> int:
-    """Jiffies the tree burned between two snapshots: per-pid own+cutime
-    increments for surviving pids, full value for pids born in between,
-    zero (the only safe floor) for pids that vanished — MINUS, per
-    surviving parent, the snapshot-time burn of children it reaped
-    inside the window (their lifetime rolls into the parent's cutime at
-    reap; only the post-snapshot part is in-window burn). The
-    correction floors at the parent's cutime increment, so a child
-    orphaned OUT of the tree can never drive the delta negative."""
+    """Jiffies the tree burned between two snapshots: per-pid increments
+    for surviving pids, full value for pids born in between, zero (the
+    only safe floor) for vanished pids — minus, per surviving parent, the
+    snapshot-time burn of children it reaped inside the window, floored
+    at the parent's cutime increment so the delta never goes negative."""
     reaped_at_t0: dict[int, int] = {}
     for p, (own0, cum0, pp0) in tree0.items():
         if p not in tree1:
@@ -169,13 +140,9 @@ def foreign_cpu_fraction(
 ) -> tuple[float, float]:
     """(foreign, steal) shares of the machine's CPU since the snapshot:
     foreign = everything consumed OUTSIDE this bench's process tree
-    (including steal), steal = the hypervisor-withheld share alone.
-    Both ~0.0 on a quiet host regardless of how hard the bench itself
-    drives the CPUs (which is why raw loadavg can't adjudicate:
-    local[32] pins loadavg at 32 by design). Self-adjudication for the
-    round-10 contended-host class; the steal split tells the reader
-    whether the noise was guest processes (fixable here) or host-tenant
-    contention (not)."""
+    (including steal), steal = the hypervisor-withheld share alone. Both
+    ~0.0 on a quiet host however hard the bench drives the CPUs; the
+    split says whether noise was guest processes or host contention."""
     elapsed = time.time() - t0
     if elapsed <= 0:
         return 0.0, 0.0
@@ -187,63 +154,36 @@ def foreign_cpu_fraction(
     return min(1.0, foreign / capacity), min(1.0, steal / capacity)
 
 
-def time_query(build, spark, sf_dir: str) -> tuple[float, float]:
-    """(warm median, cold first run). The warm-up run IS the cold number:
-    with the cache cleared before each query, run 0 pays plan compile +
-    every persist materialization — the cost a fresh cluster session
-    (the only kind a real job gets) pays once per job. Recording it
-    closed a real blind spot: x_winnow_candidates benched 1.09 s warm
-    while its cold first build was 93 s (the round-9 inferred-filter
-    bug, PLANS.md) — a class per-session medians can never show."""
-    times = []
-    cold = 0.0
-    for i in range(RUNS + 1):
-        t0 = time.time()
-        build(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        dt = time.time() - t0
-        if i == 0:
-            cold = dt
-        else:
-            times.append(dt)
-    return statistics.median(times), cold
-
-
 def main() -> int:
     names = sys.argv[1:]
-    registry = load_all()
-    todo = {
-        n: s for n, s in registry.items() if (n in names if names else s.bench)
-    }
-    spark = get_spark("bench")
+    todo = sweep.select(sorted(names), keep=lambda s: s.bench)
+    spark = sweep.session("bench")
     results: dict[str, float] = {}
     colds: dict[str, float] = {}
     host_busy: dict[str, float] = {}
     host_steal: dict[str, float] = {}
     loadavg_start = round(os.getloadavg()[0], 2)
-    for name, spec in sorted(todo.items()):
+
+    def step(name, spec) -> tuple[float, list[float]]:
+        # The warm-up run IS the cold number: run 0 pays plan compile and
+        # every persist, as a fresh cluster session does once per job
+        # (x_winnow_candidates: 1.09 s warm, 93 s cold — the round-9
+        # inferred-filter bug, PLANS.md).
         snap = (time.time(), _host_busy_jiffies(), _host_steal_jiffies(), _tree_cpu_snapshot())
         try:
-            med, cold = time_query(spec.build, spark, SF_DIR)
-            results[name] = round(med, 3)
-            colds[name] = round(cold, 3)
-        except Exception as e:  # a broken query must not kill the whole bench
-            print(f"# bench error {name}: {type(e).__name__}: {str(e)[:200]}", file=sys.stderr)
+            return sweep.timed(spark, spec.build, SF_DIR, RUNS)
+        finally:
+            host_busy[name], host_steal[name] = (
+                round(v, 3) for v in foreign_cpu_fraction(*snap)
+            )
+
+    for name, timing, err in sweep.run(spark, todo, step):
+        if err is not None:  # a broken query must not kill the whole bench
+            print(f"# bench error {name}: {sweep.why(err, 200)}", file=sys.stderr)
             results[name] = -1.0
-        host_busy[name], host_steal[name] = (
-            round(v, 3) for v in foreign_cpu_fraction(*snap)
-        )
-        # Several operators persist intermediate frames (shingle sets, LSH
-        # signatures) that are reused *within* one execution; across 80+
-        # queries in one session the leaked blocks pile up into storage-
-        # memory pressure that inflates later queries. Clearing between
-        # queries keeps each number order-independent (runs of the SAME
-        # query still share the persist inside time_query).
-        spark.catalog.clearCache()
-        # Also drain the rank family's Python-side persist registry:
-        # clearCache unpersists the blocks but the DataFrame refs (and
-        # their plan objects) would otherwise accumulate on the driver
-        # across hundreds of queries (round-12 ADVICE).
-        release_rank_caches()
+        else:
+            results[name] = round(statistics.median(timing[1]), 3)
+            colds[name] = round(timing[0], 3)
         print(f"# {name}: {results[name]}s", file=sys.stderr)
     # Flag pathological cold/warm ratios loudly: a first build >=10x its
     # warm median on a non-trivial query is the inferred-filter bug class
@@ -258,12 +198,8 @@ def main() -> int:
     total = round(sum(v for v in results.values() if v >= 0), 3)
     sf = sf_from_dir(SF_DIR)
     errors = sorted(n for n, v in results.items() if v < 0)
-    # Host-noise adjudication: the fraction of machine CPU burned by
-    # processes OUTSIDE this bench while each query was being timed.
-    # "quiet" = every window under HOST_NOISE_FRAC; "noisy" lists the
-    # contaminated queries so a slow recording carries its own excuse
-    # (or lack of one) — the round-10 r10 artifact needed a judge to
-    # re-measure three knn queries by hand to reach this same verdict.
+    # "quiet" = every timing window under HOST_NOISE_FRAC foreign CPU;
+    # "noisy" lists the contaminated queries.
     noisy = sorted(n for n, f in host_busy.items() if f >= HOST_NOISE_FRAC)
     host_noise = "noisy" if noisy else "quiet"
     if noisy:
@@ -279,9 +215,7 @@ def main() -> int:
         )
     # Subset invocations (explicit query names) must not clobber the
     # full-run record the driver and judge read.
-    full_path = os.path.join(
-        REPO_ROOT, "BENCH_FULL.json" if not names else "BENCH_SUBSET.json"
-    )
+    full_path = os.path.join(REPO_ROOT, "BENCH_FULL.json" if not names else "BENCH_SUBSET.json")
     record = {
         "metric": "total_median_sec",
         "value": total,
@@ -301,39 +235,24 @@ def main() -> int:
     with open(full_path, "w") as f:
         json.dump(record, f, indent=1, sort_keys=True)
     if not names:
-        # The driver benches the same tree at two core counts and both
-        # runs write BENCH_FULL.json, so the second overwrites the
-        # first's per-query map. The per-CPUs copy keeps both runs'
-        # complete records on disk; it is what the final line names and
-        # what round-over-round and scaling comparators read.
+        # The driver benches at two core counts and both runs write
+        # BENCH_FULL.json; the per-CPUs copy keeps both records, and is
+        # what the final line names and comparators read.
         full_path = os.path.join(REPO_ROOT, f"BENCH_FULL_c{CPUS}.json")
         with open(full_path, "w") as f:
             json.dump(record, f, indent=1, sort_keys=True)
-    # Compact final line, guaranteed well under the driver's 2000-char
-    # tail capture (round-2 parsed null, round-3 truncated): total,
-    # counts, geomean vs the BASELINE.md §3 v1 ratchets, and only the
-    # worst-3 ratio queries. The complete per-query map lives in the
-    # file named by queries_file.
-    sys.path.insert(0, os.path.join(REPO_ROOT, "tools"))
+    # Compact final line, well under the driver's 2000-char tail capture:
+    # totals, geomean vs the BASELINE.md §3 v1 ratchets, worst-3 ratios.
     geomean = None
     worst3: dict[str, float] = {}
     try:
         from benchcmp import load_baseline
 
         base = load_baseline()
-        ratios = {
-            n: results[n] / base[n]
-            for n in results
-            if results[n] >= 0 and base.get(n, 0) > 0
-        }
+        ratios = {n: v / base[n] for n, v in results.items() if v >= 0 and base.get(n, 0) > 0}
         if ratios:
-            geomean = round(
-                statistics.geometric_mean(list(ratios.values())), 3
-            )
-            worst3 = {
-                n: round(r, 2)
-                for n, r in sorted(ratios.items(), key=lambda kv: -kv[1])[:3]
-            }
+            geomean = round(statistics.geometric_mean(list(ratios.values())), 3)
+            worst3 = {n: round(r, 2) for n, r in sorted(ratios.items(), key=lambda kv: -kv[1])[:3]}
     except Exception as e:  # baseline table absent/unparseable: still report times
         print(f"# baseline compare skipped: {e}", file=sys.stderr)
     print(

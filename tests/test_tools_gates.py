@@ -18,6 +18,8 @@ import sys
 
 import pytest
 
+from tests.conftest import SF_SMOKE
+
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, os.path.join(REPO, "tools"))
 
@@ -364,6 +366,85 @@ def test_scalecheck_requires_two_distinct_ks():
     )
     assert p.returncode != 0
     assert "two distinct K" in (p.stderr + p.stdout)
+
+
+# --- the sweep runner --------------------------------------------------------
+
+
+def test_sweep_records_a_raising_build_and_runs_the_next_query(spark, capsys):
+    """A build that raises is that query's failure, not the sweep's: the
+    next query still runs and the gate exits 1."""
+    import sweep
+    from music_database_spark.registry import QuerySpec
+
+    def boom(spark, sf_dir):
+        raise RuntimeError("planted build failure")
+
+    todo = {
+        "boom": QuerySpec("boom", boom),
+        "fine": QuerySpec("fine", lambda spark, sf_dir: spark.range(3)),
+    }
+    rc = sweep.check(spark, todo, sweep.oracle_check(spark, SF_SMOKE), "spark error", "pass")
+    out = capsys.readouterr().out.splitlines()
+    assert rc == 1
+    assert out[0] == "FAIL  boom: spark error: RuntimeError: planted build failure"
+    assert out[1].startswith("ok*   fine: rows-only, 3 rows")
+    assert out[-1] == "1/2 pass"
+
+
+def test_replicate_shifts_keys_salts_documents_and_keeps_bounded_dims(spark):
+    """K=2 replicas: every shifted table doubles with the copy's shifted
+    keys disjoint from the base's; region and nation stay one copy; each
+    document copy is its base row with doc_id shifted and text salted."""
+    from pyspark.sql import functions as F
+
+    import sweep
+    from music_database_spark.sources.loader import DRIVER_TABLES, load_table
+
+    for t in DRIVER_TABLES:
+        base = load_table(spark, SF_SMOKE, t)
+        rep = sweep.replicate(base, t, 2)
+        n = base.count()
+        if t in ("region", "nation"):
+            assert rep.count() == n and rep.exceptAll(base).count() == 0, t
+            continue
+        assert rep.count() == 2 * n, t
+        copy = rep.exceptAll(base)
+        assert copy.count() == n, t
+        for c in sweep.SHIFT.get(t) or ("doc_id",):
+            assert copy.select(c).intersect(base.select(c)).count() == 0, (t, c)
+    docs = load_table(spark, SF_SMOKE, "documents")
+    n = docs.count()
+    salted = sweep.replicate(docs, "documents", 2).filter(F.col("text").endswith(" replica1"))
+    unsalted = salted.select(
+        (F.col("doc_id") - n).alias("doc_id"),
+        F.expr("substring(text, 1, length(text) - length(' replica1'))").alias("text"),
+        *[c for c in docs.columns if c not in ("doc_id", "text")],
+    )
+    assert salted.count() == n
+    assert unsalted.exceptAll(docs).count() == 0 and docs.exceptAll(unsalted).count() == 0
+
+
+def test_diffcheck_main_passes_two_queries_in_process(spark, capsys, monkeypatch):
+    """Tier-1 smoke of a real tool loop: diffcheck's main over two
+    oracle-checked queries at sf0.001."""
+    import diffcheck
+
+    partitions = spark.conf.get("spark.sql.shuffle.partitions")
+    monkeypatch.setattr(
+        sys, "argv", ["diffcheck.py", SF_SMOKE, "q1_singles_by_artist", "q12_pricing_summary"]
+    )
+    try:
+        rc = diffcheck.main()
+    finally:  # get_spark re-applies its SQL confs to the shared session
+        spark.conf.set("spark.sql.shuffle.partitions", partitions)
+    out = capsys.readouterr().out.splitlines()
+    assert rc == 0
+    assert [line.split(":")[0] for line in out[:2]] == [
+        "ok    q1_singles_by_artist",
+        "ok    q12_pricing_summary",
+    ]
+    assert out[-1] == "2/2 pass"
 
 
 # --- registry-declared layout exemptions -----------------------------------

@@ -1,13 +1,12 @@
 """Fresh-JVM cold sweep: first-build timings with NOTHING shared.
 
-bench.py's cold number (first build after clearCache) still shares one
-JVM across all 272 queries — JIT-compiled codegen, broadcast relations,
-the parquet footer cache, and Python worker pools are all warm by the
-time most queries run. This tool spawns ONE FRESH PYTHON+JVM PROCESS
-PER QUERY FAMILY (build-function module) and times each family query's
-FIRST build there, after a tiny session warm-up job that pays JVM/
-Arrow/Python-worker startup without touching the query's own plan. That
-is the closest local stand-in for what a new cluster session pays.
+bench.py's cold number still shares one JVM across all bench queries,
+with codegen, broadcasts, the parquet footer cache and Python workers
+warm by the time most queries run. This tool spawns ONE FRESH
+PYTHON+JVM PROCESS PER QUERY FAMILY (build-function module) and times
+each family query's FIRST build there, after a tiny session warm-up
+that does not touch the query's own plan: the closest local stand-in
+for what a new cluster session pays.
 
     python tools/coldsweep.py                # sweep all families -> COLDSWEEP.json
     python tools/coldsweep.py --family music_database_spark.plans.windows
@@ -27,9 +26,9 @@ import subprocess
 import sys
 import time
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
+import sweep
 
+REPO = sweep.REPO
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 OUT = os.path.join(REPO, "COLDSWEEP.json")
 ALERT_RATIO = 10.0
@@ -50,42 +49,32 @@ ALERT_EXEMPT: dict[str, str] = {
 
 
 def family_names() -> dict[str, list[str]]:
-    from music_database_spark.registry import load_all
-
     fams: dict[str, list[str]] = {}
-    for n, spec in load_all().items():
-        if spec.bench:  # same population the warm bench records
-            fams.setdefault(spec.build.__module__, []).append(n)
+    # same population the warm bench records
+    for n, spec in sweep.select(keep=lambda s: s.bench, sort=False).items():
+        fams.setdefault(spec.build.__module__, []).append(n)
     return fams
 
 
 def run_family(module: str) -> None:
     """Child-process mode: fresh session, warm the JVM on a trivial job,
     then time each family query's FIRST (and only) build."""
-    from music_database_spark.registry import load_all
-    from music_database_spark.session import get_spark
-
-    reg = load_all()
-    names = [n for n, s in reg.items() if s.bench and s.build.__module__ == module]
-    spark = get_spark(
+    todo = sweep.select(keep=lambda s: s.bench and s.build.__module__ == module, sort=False)
+    spark = sweep.session(
         f"coldsweep_{module.rsplit('.', 1)[-1]}",
         extra_conf={"spark.ui.showConsoleProgress": "false"},
     )
-    # Session warm-up: pays JVM JIT bring-up, Arrow init, one parquet
-    # footer read and one Python-worker fork — none of it specific to
-    # any query's plan, all of it noise we don't want attributed to the
-    # first query in the family.
+    # Session warm-up: JVM JIT bring-up, Arrow init, one parquet footer
+    # read, one Python-worker fork — noise not to attribute to the
+    # family's first query.
     spark.range(1000).selectExpr("sum(id)").collect()
     spark.read.parquet(os.path.join(SF_DIR, "region.parquet")).count()
     spark.createDataFrame([(1,)], "x int").toPandas()
-    # ... plus ONE representative scan->expression->hash-agg->noop job
-    # over a tiny table: the first such query in a fresh JVM pays ~2.5 s
-    # of Janino/whole-stage-codegen bring-up shared by every query shape
-    # (round-11: the window rotation reordered the registry and moved
-    # that shared cost onto x_mixture_sample, tripping the 10x gate on a
-    # 0.35 s-warm query; measured 3.65 s -> 1.78 s with this job first —
-    # the residual is the query's own first page-reads, which is what
-    # the sweep should attribute).
+    # ... plus ONE scan->expression->hash-agg->noop job over a tiny
+    # table: the first such query in a fresh JVM pays ~2.5 s of
+    # whole-stage-codegen bring-up shared by every query shape (round 11:
+    # it tripped the 10x gate on x_mixture_sample, 3.65 s -> 1.78 s with
+    # this job first; the residual is the query's own first page reads).
     from pyspark.sql import functions as F
 
     (
@@ -98,19 +87,18 @@ def run_family(module: str) -> None:
         .save()
     )
     out: dict[str, float] = {}
-    for n in names:
-        t0 = time.time()
-        try:
-            reg[n].build(spark, SF_DIR).write.format("noop").mode("overwrite").save()
-            out[n] = round(time.time() - t0, 3)
-        except Exception as e:  # recorded, not fatal — the sweep must finish
-            print(f"# ERROR {n}: {type(e).__name__}: {str(e)[:200]}", file=sys.stderr)
-            out[n] = -1.0
-        spark.catalog.clearCache()
+
+    def first_build(n, spec) -> float:
+        return sweep.timed(spark, spec.build, SF_DIR, runs=1, warmup=0)[0]
+
+    for n, cold, err in sweep.run(spark, todo, first_build):
+        if err is not None:  # recorded, not fatal — the sweep must finish
+            print(f"# ERROR {n}: {sweep.why(err, 200)}", file=sys.stderr)
+        out[n] = -1.0 if err is not None else round(cold, 3)
     print(json.dumps(out))
 
 
-def sweep() -> int:
+def sweep_families() -> int:
     fams = family_names()
     results: dict[str, float] = {}
     t_start = time.time()
@@ -135,12 +123,8 @@ def sweep() -> int:
             file=sys.stderr,
         )
     with open(OUT, "w") as f:
-        json.dump(
-            {"sf_dir": SF_DIR, "mode": "fresh-jvm-per-family", "queries": results},
-            f,
-            indent=1,
-            sort_keys=True,
-        )
+        record = {"sf_dir": SF_DIR, "mode": "fresh-jvm-per-family", "queries": results}
+        json.dump(record, f, indent=1, sort_keys=True)
     print(f"# wrote {OUT}: {len(results)} queries", file=sys.stderr)
     return report()
 
@@ -175,7 +159,7 @@ def main() -> int:
         return 0
     if "--report" in sys.argv:
         return report()
-    return sweep()
+    return sweep_families()
 
 
 if __name__ == "__main__":

@@ -13,65 +13,32 @@ attributed), plus the Exchange count of the final plan."""
 
 from __future__ import annotations
 
+import argparse
 import os
-import sys
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
-
-from music_database_spark.registry import load_all  # noqa: E402
-from music_database_spark.session import get_spark  # noqa: E402
+import sweep
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
-def run_counted(spark, build, sf_dir: str, group: str) -> tuple[int, int, int]:
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    build(spark, sf_dir).write.format("noop").mode("overwrite").save()
-    sc.setJobGroup(None, None)
-    tracker = sc.statusTracker()
-    jobs = tracker.getJobIdsForGroup(group)
-    stages: set[int] = set()
-    tasks = 0
-    for j in jobs:
-        info = tracker.getJobInfo(j)
-        if info:
-            stages.update(info.stageIds)
-    for s in stages:
-        si = tracker.getStageInfo(s)
-        if si:
-            tasks += si.numTasks
-    return len(jobs), len(stages), tasks
-
-
 def main() -> int:
-    import argparse
-
     ap = argparse.ArgumentParser(
         description="Count Spark jobs/stages/tasks for registered queries"
     )
     ap.add_argument("queries", nargs="+", help="registered query names")
     ap.add_argument("--sf", default=SF_DIR, help="scale-factor data dir")
     ns = ap.parse_args()
-    args, sf_dir = ns.queries, ns.sf
-    reg = load_all()
-    spark = get_spark("jobcount")
-    for name in args:
-        spec = reg[name]
-        # throwaway run: codegen compile, cache materialization paths warm
-        spec.build(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        spark.catalog.clearCache()
-        from music_database_spark.operators.ranking import release_rank_caches
+    spark = sweep.session("jobcount")
 
-        release_rank_caches()
-        jobs, stages, tasks = run_counted(spark, spec.build, sf_dir, f"jc_{name}")
-        plan = spec.build(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
-        nexch = plan.count("Exchange")
-        print(f"{name}: jobs={jobs} stages={stages} tasks={tasks} plan_exchanges={nexch}")
-        spark.catalog.clearCache()
-        release_rank_caches()
-    return 0
+    def step(name, spec) -> bool:
+        sweep.timed(spark, spec.build, ns.sf, runs=0)  # throwaway: codegen, cache paths warm
+        sweep.release(spark)
+        jobs, stages, tasks = sweep.counted(spark, spec.build, ns.sf, f"jc_{name}")
+        plan = spec.build(spark, ns.sf)._jdf.queryExecution().executedPlan().toString()
+        print(f"{name}: jobs={jobs} stages={stages} tasks={tasks} plan_exchanges={plan.count('Exchange')}")
+        return True
+
+    return sweep.check(spark, sweep.select(ns.queries), step, "error")
 
 
 if __name__ == "__main__":

@@ -3,15 +3,13 @@ deterministically scrambled (ordered by a row-content hash) and split
 across several parquet files, then run every registered query on BOTH
 layouts through Spark and require bit-identical normalized results.
 
-Why it exists (round 9): on a real cluster the physical layout is an
-accident — file order, row order within files, and split count all vary
-with ingest history and executor count. Any query whose OUTPUT depends
-on that layout (a LIMIT resolving ties by scan order, a collect_list
-without sort_array, a float aggregation whose partial-merge order leaks
-into the hash) is nondeterministic at 1000 executors even if it is
-rock-stable on the driver's single-row-group testdata. The three-SF and
-variant-data sweeps re-roll VALUES; this sweep re-rolls PHYSICAL ORDER
-with values held fixed — the one axis they cannot reach.
+Why it exists (round 9): on a real cluster file order, row order and
+split count vary with ingest history and executor count. A query whose
+OUTPUT depends on them (a LIMIT resolving ties by scan order, a
+collect_list without sort_array, a float aggregation whose partial-merge
+order leaks into the hash) is nondeterministic at scale even if it is
+stable on the single-row-group testdata. The three-SF and variant-data
+sweeps re-roll VALUES; this one re-rolls PHYSICAL ORDER.
 
     python tools/layoutcheck.py                 # materialize + sweep
     python tools/layoutcheck.py --materialize   # only write the layout
@@ -25,154 +23,33 @@ physical layout itself — must merely execute).
 
 from __future__ import annotations
 
-import glob
 import os
-import shutil
 import sys
-import time
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
+import sweep
 
 BASE = os.environ.get("SPARK_GRAFT_LAYOUT_BASE", "/root/testdata/sf0.01")
 SPLITS = int(os.environ.get("SPARK_GRAFT_LAYOUT_SPLITS", "7"))
 
-
-def _out_dir() -> str:
-    """One OUT path per (base CONTENT, splits) — the same derived-cache
-    keying convention as variantcheck (loader.source_content_tag), so a
-    regenerated base at the same path can never serve another
-    generation's derived layout caches."""
-    from music_database_spark.sources.loader import source_content_tag
-
-    return os.path.join(
-        REPO,
-        ".tmp",
-        f"layout_{os.path.basename(os.path.normpath(BASE))}"
-        f"_{source_content_tag(BASE)}_s{SPLITS}",
-    )
-
-
-OUT = _out_dir()
-
-# Queries whose OUTPUT is a measurement of the physical layout are
-# declared AT REGISTRATION (QuerySpec.layout_exempt carries the
-# documented why — currently x_compaction, x_sorted_layout,
-# x_rolling_distinct_hll, x_approx_percentiles): comparing them across
-# layouts would assert that a layout probe cannot see the layout. They
-# still must run without error on the scrambled copy. Declaring the
-# exemption on the registration, not here, means a new order-sensitive
-# query cannot be exempted by editing tool code (round-9 verdict ask
-# #7); tests pin the exempt set's exact membership.
+# Queries whose OUTPUT measures the physical layout are declared AT
+# REGISTRATION (QuerySpec.layout_exempt carries the why), never here, so
+# tool code cannot exempt a query; tests pin the exempt set.
 
 
 def exempt_queries() -> dict[str, str]:
-    from music_database_spark.registry import load_all
-
-    return {
-        n: spec.layout_exempt
-        for n, spec in load_all().items()
-        if spec.layout_exempt is not None
-    }
-
-
-def materialize() -> None:
-    from pyspark.sql import functions as F
-
-    from music_database_spark.session import get_spark
-    from music_database_spark.sources.loader import DRIVER_TABLES, load_table
-
-    spark = get_spark("layoutcheck")
-    # Sweep superseded layout generations for this (basename, splits)
-    stem = f"layout_{os.path.basename(os.path.normpath(BASE))}_"
-    for d in glob.glob(os.path.join(REPO, ".tmp", f"{stem}*_s{SPLITS}")):
-        if d != OUT:
-            shutil.rmtree(d, ignore_errors=True)
-            print(f"# swept superseded layout dir {d}", file=sys.stderr)
-    # One-time hygiene: the pre-round-10 UNTAGGED name (layout_<base>_s<N>,
-    # no content tag) matches neither OUT nor the tagged glob above, so a
-    # checkout upgraded across the tag refactor would keep the stale dir
-    # forever (round-10 advisor). Never read, purely disk reclamation.
-    legacy = os.path.join(REPO, ".tmp", f"{stem}s{SPLITS}")
-    if os.path.isdir(legacy):
-        shutil.rmtree(legacy, ignore_errors=True)
-        print(f"# swept legacy untagged layout dir {legacy}", file=sys.stderr)
-    os.makedirs(OUT, exist_ok=True)
-    for t in DRIVER_TABLES:
-        df = load_table(spark, BASE, t)
-        # Deterministic adversarial shuffle: order rows by a content hash
-        # (any fixed permutation works; content-hash makes it reproducible
-        # without Math.random), range-split into SPLITS files so scans
-        # arrive multi-partition with scrambled intra-file order.
-        key = F.md5(F.to_json(F.struct(*[F.col(c) for c in df.columns])))
-        (
-            df.withColumn("_lk", key)
-            .repartitionByRange(SPLITS, "_lk")
-            .sortWithinPartitions("_lk")
-            .drop("_lk")
-            .write.mode("overwrite")
-            .parquet(os.path.join(OUT, f"{t}.parquet"))
-        )
-        print(f"# {t}: scrambled into {SPLITS} ranges", file=sys.stderr)
-    # Same staleness rule as variantcheck: rewriting the dataset orphans
-    # any derived on-disk layout cache keyed by this basename.
-    vbase = os.path.basename(OUT)
-    for entry in glob.glob(os.path.join(REPO, ".tmp", "*", f"*{vbase}*")):
-        shutil.rmtree(entry, ignore_errors=True)
-        print(f"# swept stale layout cache {entry}", file=sys.stderr)
-
-
-def sweep(names: list[str]) -> int:
-    from music_database_spark.registry import load_all
-    from music_database_spark.session import get_spark
-
-    sys.path.insert(0, os.path.join(REPO, "tools"))
-    from diffcheck import normalize  # noqa: E402
-
-    spark = get_spark("layoutcheck")
-    registry = load_all()
-    todo = {n: registry[n] for n in (names or sorted(registry))}
-    exempt = exempt_queries()
-    failures = []
-    for name, spec in todo.items():
-        t0 = time.time()
-        try:
-            a = normalize(spec.build(spark, BASE).toPandas())
-            b = normalize(spec.build(spark, OUT).toPandas())
-        except Exception as e:
-            failures.append(name)
-            print(f"FAIL  {name}: error: {type(e).__name__}: {str(e)[:300]}")
-            continue
-        if name in exempt:
-            print(
-                f"ok*   {name}: layout-measuring, ran on both "
-                f"({len(a)}/{len(b)} rows, {time.time()-t0:.1f}s)"
-            )
-            continue
-        if list(a.columns) != list(b.columns):
-            failures.append(name)
-            print(f"FAIL  {name}: columns {list(a.columns)} vs {list(b.columns)}")
-        elif len(a) != len(b):
-            failures.append(name)
-            print(f"FAIL  {name}: rowcount {len(a)} vs {len(b)}")
-        elif not a.equals(b):
-            failures.append(name)
-            diff = (a != b).any(axis=1)
-            print(f"FAIL  {name}: {int(diff.sum())} differing rows of {len(a)}")
-            print("  base     :", a[diff].head(3).to_dict("records"))
-            print("  scrambled:", b[diff].head(3).to_dict("records"))
-        else:
-            print(f"ok    {name}: {len(a)} rows layout-invariant ({time.time()-t0:.1f}s)")
-    print(f"\n{len(todo) - len(failures)}/{len(todo)} layout-invariant")
-    return 1 if failures else 0
+    todo = sweep.select(keep=lambda s: s.layout_exempt is not None)
+    return {n: s.layout_exempt for n, s in todo.items()}
 
 
 def main() -> int:
-    materialize()
+    spark = sweep.session("layoutcheck")
+    out = sweep.derived("layout", BASE, f"s{SPLITS}")
+    sweep.materialize(spark, BASE, out, lambda df, t: sweep.scramble(df, SPLITS))
     if "--materialize" in sys.argv[1:]:
         return 0
-    names = [a for a in sys.argv[1:] if not a.startswith("--")]
-    return sweep(names)
+    todo = sweep.select([a for a in sys.argv[1:] if not a.startswith("--")])
+    step = sweep.layout_check(spark, BASE, out, exempt_queries())
+    return sweep.check(spark, todo, step, "error", "layout-invariant")
 
 
 if __name__ == "__main__":

@@ -1,146 +1,43 @@
 """Adversarial-data differential sweep: materialize a VARIANT dataset —
 K shifted/salted replicas of a base SF, preserving schemas but changing
 every value distribution the oracles sum over — then run the full
-Spark-vs-DuckDB diffcheck on it.
+Spark-vs-DuckDB diffcheck on it, in the same process.
 
-Why it exists (round 8): hash-equality on the driver's fixed testdata
-can be a deterministic ulp lottery (double<->decimal conversions, tied
-window orders land the same way every run on the SAME data). Variant
-data re-rolls that lottery and stresses the dedup/span paths with true
-near-dup replicas. First run found two real bugs the three-SF sweeps
-never could: the q12-family decimal conversion asymmetry and
-x_span_mask's tie-ordered two-window gap-merge split.
+Why it exists (round 8): hash-equality on fixed testdata can be a
+deterministic ulp or tie-order lottery that lands the same way every run
+on the SAME data. Variant data re-rolls it and stresses the dedup/span
+paths with true near-dup replicas; the first run found two real bugs
+(q12-family decimal conversion, x_span_mask's tie-ordered gap merge).
 
     python tools/variantcheck.py                 # materialize + sweep
     python tools/variantcheck.py --materialize   # only write .tmp/variant
     SPARK_GRAFT_VARIANT_BASE=/root/testdata/sf0.001 python tools/variantcheck.py
 
-Documents get the salted near-dup treatment (worst case for candidate
-generation); fact/entity keys shift per replica so copies are disjoint;
-bounded dims (region, nation) stay identical.
+The data is sweep.replicate's: documents get the salted near-dup
+treatment (worst case for candidate generation); fact/entity keys shift
+per replica so copies are disjoint; bounded dims (region, nation) stay
+identical.
 """
 
 from __future__ import annotations
 
-import glob
 import os
-import shutil
-import subprocess
 import sys
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
+import diffcheck
+import sweep
 
 BASE = os.environ.get("SPARK_GRAFT_VARIANT_BASE", "/root/testdata/sf0.01")
 K = int(os.environ.get("SPARK_GRAFT_VARIANT_K", "2"))
 
 
-def _out_dir() -> str:
-    """One OUT path per (base CONTENT, K) under the repo-wide derived-
-    cache convention (loader.source_content_tag): registered queries key
-    their physical-layout caches by basename(sf_dir)+content tag, so a
-    REGENERATED base at the same path gets a fresh variant directory
-    name and can never be served another generation's derived layouts
-    (round-9 advisor finding; before this the name carried only
-    basename+K). Superseded same-(basename,K) variant dirs are swept at
-    materialize time."""
-    from music_database_spark.sources.loader import source_content_tag
-
-    return os.path.join(
-        REPO,
-        ".tmp",
-        f"variant_{os.path.basename(os.path.normpath(BASE))}"
-        f"_{source_content_tag(BASE)}_k{K}",
-    )
-
-
-OUT = _out_dir()
-
-SHIFT: dict[str, tuple[str, ...]] = {
-    "region": (),
-    "nation": (),
-    "customer": ("c_custkey",),
-    "supplier": ("s_suppkey",),
-    "part": ("p_partkey",),
-    "orders": ("o_orderkey", "o_custkey"),
-    "lineitem": ("l_orderkey", "l_suppkey", "l_partkey"),
-    "events": ("event_id", "user_id"),
-    "embeddings": ("vec_id",),
-}
-
-
-def materialize() -> None:
-    from pyspark.sql import functions as F
-
-    from music_database_spark.session import get_spark
-    from music_database_spark.sources.loader import DRIVER_TABLES, load_table
-
-    spark = get_spark("variantcheck")
-    # Sweep superseded variant generations for this (basename, K): their
-    # base content tag differs, so they describe data that no longer
-    # exists (and their own derived layout caches were content-keyed).
-    stem = f"variant_{os.path.basename(os.path.normpath(BASE))}_"
-    for d in glob.glob(os.path.join(REPO, ".tmp", f"{stem}*_k{K}")):
-        if d != OUT:
-            shutil.rmtree(d, ignore_errors=True)
-            print(f"# swept superseded variant dir {d}", file=sys.stderr)
-    os.makedirs(OUT, exist_ok=True)
-    for t in DRIVER_TABLES:
-        df = load_table(spark, BASE, t)
-        if t == "documents":
-            n = df.count()
-            out = df
-            for r in range(1, K):
-                out = out.unionByName(
-                    df.select(
-                        (F.col("doc_id") + r * n).alias("doc_id"),
-                        F.concat(F.col("text"), F.lit(f" replica{r}")).alias("text"),
-                        *[c for c in df.columns if c not in ("doc_id", "text")],
-                    ).select(df.columns)
-                )
-            df = out
-        elif SHIFT.get(t, ()):
-            cols = SHIFT[t]
-            maxes = df.agg(*[(F.max(c) + 1).alias(c) for c in cols]).collect()[0]
-            out = df
-            for r in range(1, K):
-                out = out.unionByName(
-                    df.select(
-                        *[
-                            (F.col(c) + r * maxes[c]).alias(c) if c in cols else F.col(c)
-                            for c in df.columns
-                        ]
-                    )
-                )
-            df = out
-        # single file per table: DuckDB's read_parquet in diffcheck takes
-        # the path verbatim, not a glob
-        tmpdir = os.path.join(OUT, f"_tmp_{t}")
-        df.coalesce(1).write.mode("overwrite").parquet(tmpdir)
-        part = glob.glob(os.path.join(tmpdir, "part-*.parquet"))[0]
-        shutil.move(part, os.path.join(OUT, f"{t}.parquet"))
-        shutil.rmtree(tmpdir)
-        print(f"# {t}: materialized", file=sys.stderr)
-    # Every run rewrites the variant parquet, so any derived on-disk
-    # layout cache keyed by this basename (bucketed warehouse, DPP
-    # partition layouts, nested-doc rewrites — everything except the
-    # mtime-keyed ANN index) now describes the PREVIOUS run's data.
-    # Sweep them so registered queries rebuild from the fresh drop
-    # (advisor finding, round 8).
-    vbase = os.path.basename(OUT)
-    for entry in glob.glob(os.path.join(REPO, ".tmp", "*", f"*{vbase}*")):
-        shutil.rmtree(entry, ignore_errors=True)
-        print(f"# swept stale layout cache {entry}", file=sys.stderr)
-
-
 def main() -> int:
-    materialize()
+    spark = sweep.session("variantcheck")
+    out = sweep.derived("variant", BASE, f"k{K}")
+    sweep.materialize(spark, BASE, out, lambda df, t: sweep.replicate(df, t, K), single_file=True)
     if "--materialize" in sys.argv[1:]:
         return 0
-    names = [a for a in sys.argv[1:] if not a.startswith("--")]
-    return subprocess.call(
-        [sys.executable, os.path.join(REPO, "tools", "diffcheck.py"), OUT, *names]
-    )
+    return diffcheck.diff(out, [a for a in sys.argv[1:] if not a.startswith("--")])
 
 
 if __name__ == "__main__":
