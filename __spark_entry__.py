@@ -14,6 +14,7 @@ from __future__ import annotations
 
 import os
 import sys
+import warnings
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -34,7 +35,9 @@ FLAGSHIP = "q6_active_users"  # SURVEY.md §7.2 step 2
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001; driver checks rows>0."""
-    tune_for_session(spark)
+    refused = tune_for_session(spark)
+    if refused:
+        warnings.warn(f"session refused confs: {', '.join(refused)}", stacklevel=2)
     spec = load_all()[FLAGSHIP]
     return spec.build(spark, SMOKE_SF_DIR)
 

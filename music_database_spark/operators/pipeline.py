@@ -163,39 +163,77 @@ def x_repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _let(value, body):
+    """body(v) with v bound to ONE evaluation of value: a lambda over a
+    one-element array. Catalyst never inlines a lambda variable, so the
+    value is computed once per row wherever the result is referenced."""
+    return F.transform(F.array(value), body)[0]
+
+
+def token_flags(docs: DataFrame, text_col: str, *levels) -> DataFrame:
+    """docs + one column per name of the last level, all computed from
+    ONE split of text_col per row. The first level maps the row's token
+    array (the non-empty space-separated tokens) to {name: Column}; each
+    next level maps the struct of the previous level's columns to its
+    own. Shared by repetition_flags and quality.gopher_flags.
+
+    Why lambda levels and not one projected token column: a caller's
+    filter on a flag (`filter(~dropped)`, `filter("pass_gopher")`) is
+    pushed below the projection by inlining the flag's definition, so
+    every reference to a projected token column inlined its own
+    split(...) — 15 copies in `dropped` and 9 in `pass_gopher`, each
+    re-evaluated, interpreted, per row. Bound to lambda variables, the
+    pushed predicate holds one split and every statistic once."""
+
+    def nest(value, levels):
+        row = F.struct(*[c.alias(n) for n, c in levels[0](value).items()])
+        return row if len(levels) == 1 else _let(row, lambda s: nest(s, levels[1:]))
+
+    toks = F.filter(F.split(F.col(text_col), " "), lambda t: t != "")
+    d = docs.withColumn("__tf", _let(toks, lambda tk: nest(tk, levels)))
+    names = d.schema["__tf"].dataType.names
+    return d.withColumns({n: F.col("__tf").getField(n) for n in names}).drop("__tf")
+
+
+def _bigrams(tk):
+    return F.when(
+        F.size(tk) >= 2,
+        F.transform(
+            F.sequence(F.lit(1), F.size(tk) - 1),
+            lambda i: F.concat(F.element_at(tk, i), F.lit(" "), F.element_at(tk, i + 1)),
+        ),
+    ).otherwise(F.array())
+
+
 def repetition_flags(docs: DataFrame, text_col: str) -> DataFrame:
     """docs + Gopher repetition signals: n_tok, __max_cnt (top token
     count), __n_bi / __n_dup (bigram and duplicate-bigram counts) and
     `dropped` = top token > 30% of tokens OR duplicate bigrams > 20%.
     Shared by x_repetition_filter, x_corpus_prep_e2e and
     CorpusPipeline.with_quality_flags (which drops the __ columns)."""
-    d = docs.withColumn("__toks", F.expr(f"filter(split({text_col}, ' '), t -> t != '')"))
-    d = d.withColumn(
-        "__max_cnt",
-        F.expr(
-            "array_max(transform(array_distinct(__toks),"
-            " u -> size(filter(__toks, t -> t = u))))"
-        ),
-    ).withColumn(
-        "__bigrams",
-        F.when(
-            F.size("__toks") >= 2,
-            F.expr(
-                "transform(sequence(1, size(__toks) - 1),"
-                " i -> concat(element_at(__toks, i), ' ', element_at(__toks, i + 1)))"
+    return token_flags(
+        docs,
+        text_col,
+        lambda tk: {
+            "n_tok": F.size(tk),
+            "max_cnt": F.array_max(
+                F.transform(F.array_distinct(tk), lambda u: F.size(F.filter(tk, lambda t: t == u)))
             ),
-        ).otherwise(F.expr("array()")),
-    )
-    return (
-        d.withColumn("n_tok", F.size("__toks"))
-        .withColumn("__n_bi", F.size("__bigrams"))
-        .withColumn("__n_dup", F.size("__bigrams") - F.size(F.array_distinct("__bigrams")))
-        .withColumn(
-            "dropped",
-            (F.col("__max_cnt") * 10 > F.col("n_tok") * 3)
-            | (F.col("__n_dup") * 5 > F.col("__n_bi")),
-        )
-        .drop("__toks", "__bigrams")
+            "bigrams": _bigrams(tk),
+        },
+        lambda s: {
+            "n_tok": s["n_tok"],
+            "max_cnt": s["max_cnt"],
+            "n_bi": F.size(s["bigrams"]),
+            "n_dup": F.size(s["bigrams"]) - F.size(F.array_distinct(s["bigrams"])),
+        },
+        lambda s: {
+            "__max_cnt": s["max_cnt"],
+            "n_tok": s["n_tok"],
+            "__n_bi": s["n_bi"],
+            "__n_dup": s["n_dup"],
+            "dropped": (s["max_cnt"] * 10 > s["n_tok"] * 3) | (s["n_dup"] * 5 > s["n_bi"]),
+        },
     )
 
 

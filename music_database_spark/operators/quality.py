@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from ..plans.relational import _t
 from ..registry import register
 from ..sources.loader import scan_wide
+from .pipeline import token_flags
 from .ranking import track_cache, two_level_rank
 
 # (column, kind) pairs profiled over orders; kind picks the min/max
@@ -1984,32 +1985,29 @@ def gopher_flags(docs: DataFrame, text_col: str) -> DataFrame:
     ok_alpha_frac, ok_stopwords) and their conjunction pass_gopher, at
     the GOPHER_* thresholds. Shared by x_gopher_rules and
     CorpusPipeline.gopher_flags."""
-    d = docs.withColumn("__toks", F.expr(f"filter(split({text_col}, ' '), t -> t != '')"))
-    n_words = F.size("__toks")
-    denom = F.greatest(n_words, F.lit(1))
-    mean_wl = F.length(F.concat_ws("", F.col("__toks"))).cast("double") / denom
-    alpha = F.size(F.expr("filter(__toks, x -> x rlike '[a-z]')")).cast("double") / denom
     stops = F.array(*[F.lit(s) for s in GOPHER_STOPS])
-    n_stops = F.size(F.filter(stops, lambda s: F.array_contains(F.col("__toks"), s)))
-    return (
-        d.withColumn(
-            "ok_word_count",
-            (n_words >= GOPHER_MIN_WORDS) & (n_words <= GOPHER_MAX_WORDS),
-        )
-        .withColumn(
-            "ok_mean_word_len", (mean_wl >= GOPHER_MWL_LO) & (mean_wl <= GOPHER_MWL_HI)
-        )
-        .withColumn("ok_alpha_frac", alpha >= GOPHER_ALPHA_MIN)
-        .withColumn("ok_stopwords", n_stops >= GOPHER_STOP_MIN)
-        .withColumn(
-            "pass_gopher",
-            F.col("ok_word_count")
-            & F.col("ok_mean_word_len")
-            & F.col("ok_alpha_frac")
-            & F.col("ok_stopwords"),
-        )
-        .drop("__toks")
-    )
+
+    def stats(tk):
+        denom = F.greatest(F.size(tk), F.lit(1))
+        return {
+            "n_words": F.size(tk),
+            "mean_wl": F.length(F.concat_ws("", tk)).cast("double") / denom,
+            "alpha": F.size(F.filter(tk, lambda x: x.rlike("[a-z]"))).cast("double") / denom,
+            "n_stops": F.size(F.filter(stops, lambda w: F.array_contains(tk, w))),
+        }
+
+    def rules(s):
+        ok = {
+            "ok_word_count": (s["n_words"] >= GOPHER_MIN_WORDS)
+            & (s["n_words"] <= GOPHER_MAX_WORDS),
+            "ok_mean_word_len": (s["mean_wl"] >= GOPHER_MWL_LO) & (s["mean_wl"] <= GOPHER_MWL_HI),
+            "ok_alpha_frac": s["alpha"] >= GOPHER_ALPHA_MIN,
+            "ok_stopwords": s["n_stops"] >= GOPHER_STOP_MIN,
+        }
+        a, b, c, d = ok.values()
+        return {**ok, "pass_gopher": a & b & c & d}
+
+    return token_flags(docs, text_col, stats, rules)
 
 
 KS_SEG_A = "BUILDING"  # two-sample KS: segment A vs B order totals

@@ -2,10 +2,15 @@
 
 Conventions (SURVEY.md §4.4): AQE on (runtime re-plan, skew-join,
 partition coalescing), Arrow on (vectorized Python<->JVM transfer),
-UTC session time zone (oracle comparisons must not depend on host TZ),
-shuffle partitions sized to the local core count rather than the 200
-default — on a real cluster this would be ~2-3x total executor cores
-and AQE coalesces down from there.
+UTC session time zone (oracle comparisons must not depend on host TZ).
+get_spark fixes spark.sql.shuffle.partitions at 32 (or the caller's
+shuffle_partitions) whatever the core count or data size, rather than
+the 200 default; AQE coalesces each shuffle's output down from there by
+measured size. Persisted frames get the same coalescing: cached plans
+may change their output partitioning (RUNTIME_CONF), so a small cached
+intermediate is not pinned at 32 partitions. tune_for_session applies
+the same runtime confs to a session created elsewhere, and leaves its
+shuffle-partition count alone.
 """
 
 from __future__ import annotations
@@ -43,6 +48,27 @@ def _excluded_rules_conf(existing: str | None = None) -> str:
     return ",".join(merged)
 
 
+# Runtime SQL confs applied by both get_spark (at build) and
+# tune_for_session (on a live session created elsewhere).
+#
+# canChangeCachedPlanOutputPartitioning: by default Spark plans a
+# persisted frame with AQE's final-stage shuffle optimizations off, so a
+# cached frame keeps all spark.sql.shuffle.partitions partitions however
+# small it is, and every consumer of it runs that many tasks. With the
+# conf on, AQE coalesces the cached frame's last stage by its measured
+# size, like any other query's (minhash_near_dups' ~100 KB shingle and
+# band frames: 32 partitions -> 1). Results are unchanged; only the
+# partition count of the cached data is.
+RUNTIME_CONF: dict[str, str] = {
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+}
+
+
 def get_spark(
     app_name: str = "music-database-spark",
     cpus: str | None = None,
@@ -53,39 +79,34 @@ def get_spark(
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or 32))
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.sql.optimizer.excludedRules", _excluded_rules_conf())
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in {**RUNTIME_CONF, **(extra_conf or {})}.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
 
 
-def tune_for_session(spark: SparkSession) -> SparkSession:
-    """Apply runtime-settable conventions to an externally-created session
-    (the driver hands us its own SparkSession in __spark_entry__.entry)."""
+def tune_for_session(spark: SparkSession) -> list[str]:
+    """Apply RUNTIME_CONF and the optimizer-rule exclusions to an
+    externally-created session (__spark_entry__.entry receives its
+    caller's SparkSession). Returns the names of the confs the session
+    refused, so a caller can report them; [] when every conf applied."""
     try:
         existing = spark.conf.get("spark.sql.optimizer.excludedRules", None)
     except Exception:
         existing = None
-    for k, v in [
-        ("spark.sql.adaptive.enabled", "true"),
-        ("spark.sql.adaptive.coalescePartitions.enabled", "true"),
-        ("spark.sql.session.timeZone", "UTC"),
-        ("spark.sql.execution.arrow.pyspark.enabled", "true"),
-        ("spark.sql.optimizer.excludedRules", _excluded_rules_conf(existing)),
-    ]:
+    failed = []
+    for k, v in {
+        **RUNTIME_CONF,
+        "spark.sql.optimizer.excludedRules": _excluded_rules_conf(existing),
+    }.items():
         try:
             spark.conf.set(k, v)
         except Exception:
-            pass  # static confs can't be set post-start; defaults are fine
-    return spark
+            failed.append(k)
+    return failed

@@ -401,6 +401,24 @@ def test_gopher_flags_match_registered_query(spark, pipe):
         assert a["p_all"] == r["n_pass_all"]
 
 
+def test_pushed_quality_filters_split_the_text_once(docs, pipe):
+    """A caller's filter on a quality flag is pushed below the flag
+    projection by inlining the flag's definition. Each Filter condition
+    of the optimized plan must still split the text at most once: over a
+    projected token column, `dropped` inlined 15 splits and
+    `pass_gopher` 9, each re-run per row."""
+    from music_database_spark.operators.quality import gopher_flags
+
+    for df in (
+        pipe.with_quality_flags().filter(~F.col("dropped")),
+        gopher_flags(docs, "text").filter("pass_gopher"),
+    ):
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        filters = [ln for ln in plan.splitlines() if "Filter " in ln]
+        assert any("split(text" in ln for ln in filters), plan  # pushed, not vacuous
+        assert all(ln.count("split(text") <= 1 for ln in filters), filters
+
+
 def test_contamination_fraction_matches_registered_query(spark, docs, pipe):
     """contamination_fraction against the registered benchmark subset
     (doc_id % 50 == 0) must reproduce x_contamination_overlap's per-lang
